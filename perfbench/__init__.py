@@ -5,6 +5,6 @@ API.  Entry point: ``python3 perfbench/run.py --workload <name> --seed <n>
 from importlib import import_module
 
 WORKLOADS = {}
-for _module in ("clickstream", "querymix", "stream"):
+for _module in ("clickstream", "stream"):
     _w = import_module(f"perfbench.{_module}").Workload
     WORKLOADS[_w.name] = _w

@@ -5,9 +5,6 @@ test only ever sees the files.
 - ``clickstream_csv``: the reference's Kaggle clickstream shape (string
   timestamps with a ``' UTC'`` suffix, null ``category_code``/``brand``,
   post-purchase events, ties at the purchase timestamp).
-- ``fixture_tables``: the ten fixture tables (TPC-H-ish star plus
-  ``events``/``documents``/``embeddings``) in their parquet schemas, at a
-  chosen number of orders.
 - ``stream_event_lines``: one JSON-lines event file of the streaming
   workload.
 """
@@ -21,7 +18,6 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.csv as pacsv
-import pyarrow.parquet as pq
 
 CLICKSTREAM_COLUMNS = ["event_time", "event_type", "product_id", "category_id",
                        "category_code", "brand", "price", "user_id", "user_session"]
@@ -69,7 +65,7 @@ def clickstream_csv(path: str, n_sessions: int, seed: int) -> dict:
     order = np.argsort(epoch_s, kind="stable")
     ts = pa.array(epoch_s.astype("datetime64[s]"))
     table = pa.table({
-        "event_time": pc.strftime(ts, format="%Y-%m-%d %H:%M:%S UTC"),
+        "event_time": pc.binary_join_element_wise(ts.cast(pa.string()), " UTC", ""),
         "event_type": pa.array(etype, pa.string()),
         "product_id": pa.array(1000 + rng.zipf(1.3, total) % 20000),
         "category_id": maybe_null(rng.integers(1, 50, total), 0.2),
@@ -77,7 +73,8 @@ def clickstream_csv(path: str, n_sessions: int, seed: int) -> dict:
         "brand": maybe_null(_BRANDS[rng.integers(0, 6, total)], 0.3),
         "price": pa.array(np.round(rng.uniform(1, 500, total), 2)),
         "user_id": pa.array(500_000_000 + sess // 3),
-        "user_session": pa.array(np.char.add(f"s{seed}-", np.char.zfill(sess.astype(str), 8))),
+        "user_session": pc.binary_join_element_wise(
+            f"s{seed}-", pc.utf8_lpad(pa.array(sess).cast(pa.string()), 8, "0"), ""),
     }).take(pa.array(order))
     pacsv.write_csv(table, path, pacsv.WriteOptions(quoting_style="needed"))
     return {
@@ -88,132 +85,10 @@ def clickstream_csv(path: str, n_sessions: int, seed: int) -> dict:
     }
 
 
-# -- fixture tables -----------------------------------------------------
-
-_REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-_SEGMENTS = np.array(["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"])
-_PART_TYPES = np.array(["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"])
-_ADJ = np.array(["blue", "old", "small", "new", "hot", "large", "cold", "red"])
-_NOUN = np.array(["widget", "gizmo", "ring", "gear", "bolt", "plate", "anvil", "rod"])
-_PRIORITIES = np.array(["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"])
-_EVENT_TYPES = np.array(["view", "click", "purchase", "error", "signup"])
-_WORDS = np.array(("a the row query stream fast spark line small customer group value "
-                   "hash batch sort data big filter dup key agg scan slow table part "
-                   "merge window order column join vector").split())
-_LANGS = np.array(["en", "de", "es", "fr", "zh"])
-_DAY_US = 86_400_000_000
-_1995_US = 788_918_400_000_000   # 1995-01-01
-_2024_US = 1_704_067_200_000_000  # 2024-01-01
-
-
-def _money(rng, lo: float, hi: float, n: int) -> np.ndarray:
-    return np.round(rng.uniform(lo, hi, n), 2)
-
-
-def _ts(us: np.ndarray) -> pa.Array:
-    return pa.array(us.astype(np.int64), pa.timestamp("us"))
-
-
-def fixture_tables(out_dir: str, n_orders: int, seed: int) -> dict:
-    """Write ``{table}.parquet`` for the ten fixture tables into ``out_dir``.
-
-    Sizes follow the fixtures' ratios (orders : lineitem : customer
-    : part : supplier : events = 10 : 40 : 1 : 4/3 : 1/15 : 20/3); the
-    value domains are the fixtures' own.  A tenth of the documents are
-    near-copies of an earlier document, so the dedup families find pairs.
-    """
-    rng = np.random.default_rng([seed, 2])
-    n_cust, n_part, n_supp = n_orders // 10, n_orders * 2 // 15, max(10, n_orders // 150)
-    n_line, n_events, n_docs, n_vecs = n_orders * 4, n_orders * 2 // 3, 500, 500
-    n_users = max(20, n_events // 66)
-    tables: dict[str, pa.Table] = {}
-    tables["region"] = pa.table({
-        "r_regionkey": pa.array(range(5), pa.int32()), "r_name": _REGIONS})
-    tables["nation"] = pa.table({
-        "n_nationkey": pa.array(range(25), pa.int32()),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32())})
-    tables["customer"] = pa.table({
-        "c_custkey": np.arange(n_cust, dtype=np.int64),
-        "c_name": [f"Customer#{i:09d}" for i in range(n_cust)],
-        "c_nationkey": pa.array(rng.integers(0, 25, n_cust), pa.int32()),
-        "c_acctbal": _money(rng, -999.99, 9999.99, n_cust),
-        "c_mktsegment": _SEGMENTS[rng.integers(0, 5, n_cust)]})
-    tables["supplier"] = pa.table({
-        "s_suppkey": np.arange(n_supp, dtype=np.int64),
-        "s_name": [f"Supplier#{i:09d}" for i in range(n_supp)],
-        "s_nationkey": pa.array(rng.integers(0, 25, n_supp), pa.int32()),
-        "s_acctbal": _money(rng, -999.99, 9999.99, n_supp)})
-    tables["part"] = pa.table({
-        "p_partkey": np.arange(n_part, dtype=np.int64),
-        "p_name": np.char.add(np.char.add(_ADJ[rng.integers(0, 8, n_part)], " "),
-                              _NOUN[rng.integers(0, 8, n_part)]),
-        "p_brand": np.char.add("Brand#", rng.integers(1, 26, n_part).astype(str)),
-        "p_type": _PART_TYPES[rng.integers(0, 6, n_part)],
-        "p_size": pa.array(rng.integers(1, 51, n_part), pa.int32()),
-        "p_retailprice": np.round(900 + (np.arange(n_part) % 1000) / 10, 1)})
-    tables["orders"] = pa.table({
-        "o_orderkey": np.arange(n_orders, dtype=np.int64),
-        "o_custkey": rng.integers(0, n_cust, n_orders),
-        "o_orderstatus": np.array(["F", "O", "P"])[rng.integers(0, 3, n_orders)],
-        "o_totalprice": _money(rng, 1000, 500000, n_orders),
-        "o_orderdate": _ts(_1995_US + rng.integers(0, 2404, n_orders) * _DAY_US),
-        "o_orderpriority": _PRIORITIES[rng.integers(0, 5, n_orders)]})
-    qty = rng.integers(1, 51, n_line).astype(np.float64)
-    tables["lineitem"] = pa.table({
-        "l_orderkey": rng.integers(0, n_orders, n_line),
-        "l_partkey": rng.integers(0, n_part, n_line),
-        "l_suppkey": rng.integers(0, n_supp, n_line),
-        "l_linenumber": pa.array(rng.integers(1, 8, n_line), pa.int32()),
-        "l_quantity": qty,
-        "l_extendedprice": np.round(qty * rng.uniform(900, 2100, n_line), 2),
-        "l_discount": rng.integers(0, 11, n_line) / 100,
-        "l_tax": rng.integers(0, 9, n_line) / 100,
-        "l_returnflag": np.array(["A", "N", "R"])[rng.integers(0, 3, n_line)],
-        "l_linestatus": np.array(["F", "O"])[rng.integers(0, 2, n_line)],
-        "l_shipdate": _ts(_1995_US + _DAY_US + rng.integers(0, 2498, n_line) * _DAY_US)})
-    ev_us = np.sort(rng.integers(0, 30 * _DAY_US, n_events))
-    tables["events"] = pa.table({
-        "event_id": np.arange(n_events, dtype=np.int64),
-        "ts": _ts(_2024_US + ev_us),
-        "user_id": rng.integers(0, n_users, n_events),
-        "event_type": _EVENT_TYPES[rng.integers(0, 5, n_events)],
-        "value": np.clip(np.round(rng.exponential(50, n_events), 2), 0.01, 490.02),
-        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_events)]})
-    texts = [" ".join(_WORDS[rng.integers(0, len(_WORDS), rng.integers(10, 100))])
-             for _ in range(n_docs)]
-    for i in range(n_docs):
-        if i and rng.random() < 0.1:  # near-copy: an earlier text, one word swapped
-            words = texts[int(rng.integers(0, i))].split()
-            words[int(rng.integers(0, len(words)))] = str(_WORDS[rng.integers(0, len(_WORDS))])
-            texts[i] = " ".join(words)
-    tables["documents"] = pa.table({
-        "doc_id": np.arange(n_docs, dtype=np.int64),
-        "text": texts,
-        "lang": _LANGS[rng.integers(0, 5, n_docs)],
-        "source": np.char.add("src", rng.integers(0, 20, n_docs).astype(str)),
-        "n_chars": np.array([len(t) for t in texts], dtype=np.int64)})
-    labels = rng.integers(0, 10, n_vecs)
-    centers = rng.normal(size=(10, 64))
-    vecs = centers[labels] + 1.5 * rng.normal(size=(n_vecs, 64))
-    vecs = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)).astype(np.float32)
-    tables["embeddings"] = pa.table({
-        "vec_id": np.arange(n_vecs, dtype=np.int64),
-        "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
-        "label": pa.array(labels, pa.int32())})
-    os.makedirs(out_dir, exist_ok=True)
-    for name, table in tables.items():
-        pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))
-    return {
-        "rows": {name: t.num_rows for name, t in tables.items()},
-        "bytes": sum(os.path.getsize(os.path.join(out_dir, f"{n}.parquet")) for n in tables),
-    }
-
-
-
 # -- streaming events ------------------------------------------------------------
 
-STREAM_BASE_US = _2024_US
+STREAM_BASE_US = 1_704_067_200_000_000  # 2024-01-01
+_EVENT_TYPES = np.array(["view", "click", "purchase", "error", "signup"])
 
 
 def stream_file_name(k: int) -> str:

@@ -17,7 +17,7 @@ from dataclasses import dataclass, field
 
 from . import tracing
 
-SETUP_ROUNDS = 3
+SETUP_ROUNDS = 5
 
 
 @dataclass
@@ -75,12 +75,10 @@ class Session:
         self.jvm_pid: int | None = None
 
     def conf(self) -> dict[str, str]:
-        # -Xms = -Xmx: heap resizing mid-run made iteration times drift
         conf = {
             "spark.sql.warehouse.dir": os.path.join(self.work, "warehouse"),
             "spark.driver.extraJavaOptions":
-                f"-Djava.io.tmpdir={os.path.join(self.work, 'tmp')} -XX:-UsePerfData"
-                f" -Xms{os.environ['SPARK_GRAFT_DRIVER_MEM']}",
+                f"-Djava.io.tmpdir={os.path.join(self.work, 'tmp')} -XX:-UsePerfData",
             "spark.ui.showConsoleProgress": "false",
         }
         if self.event_log:
@@ -151,22 +149,27 @@ def fresh_dir(path: str) -> str:
     return path
 
 
-def run_setup_rounds(session: Session, tracer: Tracer, workload) -> list[float]:
-    """Set the workload up ``SETUP_ROUNDS`` times: a fresh session (the first
-    round also launches the JVM), the registry and the inputs.  Returns each
-    round's wall time; the first round counts from process start, so
-    interpreter, import and JVM start-up time are in it."""
+def run_setup_rounds(session: Session, tracer: Tracer) -> tuple[float, list[float]]:
+    """Start the program, then set it up again ``SETUP_ROUNDS`` times.
+
+    The cold start runs from process start (interpreter, imports, the JVM
+    launch) to a SparkSession from ``session.get_spark`` with the registry
+    loaded.  Each set-up round then stops the session and times only the
+    program's set-up calls: a fresh ``get_spark`` in the running JVM and
+    ``registry.load_all``.  Returns the cold start and each round's time."""
     from big_data_analytics_project_spark import registry
 
-    times = []
-    for r in range(SETUP_ROUNDS):
+    def set_up() -> None:
+        session.start(tracer)
+        with tracer.span("registry.load_all"):
+            registry.load_all()
+
+    set_up()
+    cold = time.time() - tracing.process_start_time()
+    rounds = []
+    for _ in range(SETUP_ROUNDS):
         session.stop()
-        t0 = tracing.process_start_time() if r == 0 else time.time()
-        with tracer.span("setup.round"):
-            session.start(tracer)
-            with tracer.span("registry.load_all"):
-                registry.load_all()
-            with tracer.span("setup.inputs"):
-                workload.prepare()
-        times.append(time.time() - t0)
-    return times
+        t0 = time.perf_counter()
+        set_up()
+        rounds.append(time.perf_counter() - t0)
+    return cold, rounds

@@ -6,7 +6,7 @@ runs, and a ``StreamingQueryListener`` collects micro-batch progress.  The
 workload is warmed up and measured again for the same time; the event log,
 the progress records and the spans are then reduced to per-layer numbers
 (``tracing.reduce_event_log``).  Each workload's "operations" are its
-iterations, its queries or, for streaming, its micro-batches.
+iterations or, for streaming, its drained micro-batches.
 """
 
 from __future__ import annotations
@@ -120,10 +120,8 @@ def traced_phase(work: str, session, tracer, workload, seconds: float,
     cores = int(os.environ["SPARK_GRAFT_CPUS"])
     first = {name: next((s.end - s.start for s in spans if s.name == name), 0.0)
              for name in ("session.get_spark", "registry.load_all")}
-    builds = [s.end - s.start for s in spans[first_span:] if s.name == "plans.build"]
-    if not builds:  # no separate builder: driver time before an operation's first job
-        builds = [st.first_job - lo for lo, _, st in op_stats if st.first_job is not None]
-    eager = [total(subtree(i)).jobs for i in in_window if spans[i].name == "plans.build"]
+    # driver time from the start of an operation to its first job
+    builds = [st.first_job - lo for lo, _, st in op_stats if st.first_job is not None]
     fits = [total(subtree(i)) for i in in_window if spans[i].name.endswith("run_training")]
     dur = lambda key: _mean(p["durationMs"].get(key, 0) / 1000 for p in drain)  # noqa: E731
     state = [p["stateOperators"][0] for p in drain if p.get("stateOperators")]
@@ -141,7 +139,6 @@ def traced_phase(work: str, session, tracer, workload, seconds: float,
         "plans.jobs_per_op": per_op("jobs"),
         "plans.stages_per_op": per_op("stages"),
         "plans.tasks_per_op": per_op("tasks"),
-        "plans.eager_jobs_per_op": _mean(eager),
         "sources.scan_rows": per_op("scan_rows"),
         "sources.scan_bytes": per_op("scan_bytes"),
         "sources.scan_task_s": per_op("scan_task_s"),

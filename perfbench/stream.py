@@ -9,7 +9,7 @@ JSON, in two phases:
     previous one ends, and a file's latency runs from its due time to the
     end of the bridge call of the micro-batch that read it;
 (b) drain: ``bridge.run_scored_stream`` over a staged backlog, one file per
-    micro-batch.
+    micro-batch, once before and once after the open loop.
 
 Fixed per-micro-batch costs dominate (offset and commit logs, state-store
 commit, per-batch planning, file listing, the ``toPandas`` bridge).
@@ -29,12 +29,16 @@ from .gen import stream_file_name as file_name
 from .harness import fresh_dir
 
 EVENT_RATE = 1000           # events/s offered in the open loop
-OPEN_SHARE = 0.6            # of the measured time; the drain takes about the rest
-OPEN_FILES = 150            # published in the open loop, one per tick
-PRIME_FILES = 40            # bring the query to steady state; their latency is not sampled
-DRAIN_FILES = 12
+OPEN_SHARE = 0.8            # of the measured time; the drains take about the rest
+# One file per tick.  Each micro-batch reads every file published while the
+# one before it ran, and costs a little per file, so a short tick makes a
+# batch's time grow with the previous one's and amplifies host noise.
+TICK_S = 0.08
+PRIME_FILES = 20            # bring the query to steady state; their latency is not sampled
+MIN_SAMPLED_FILES = 20
+DRAIN_FILES = 5
 DRAIN_EVENTS_PER_FILE = 2500
-WARMUP_FILES = 4
+WARMUP_FILES = 1
 USERS = 1000
 SPAN_US = 100_000_000       # event time covered by one file: 100 s
 QUIESCE_TIMEOUT_S = 30.0
@@ -92,11 +96,13 @@ class Workload:
         self.dir = os.path.join(work, "stream")
         self.failures: list[str] = []
         self.attempted = 0
+        self.checked = False
         self.reset()
 
     def reset(self) -> None:
         self.latencies: list[float] = []
-        self.drain_rates: list[float] = []
+        self.drain_batch_s: list[float] = []
+        self.drain_wall_rates: list[float] = []
         self.bridge_calls: list[tuple[int, float, float]] = []
         self.open_log: dict = {}
 
@@ -109,8 +115,13 @@ class Workload:
                        "bytes": sum(os.path.getsize(p) for p in glob.glob(f"{self.backlog}/*"))}
 
     def warmup(self, spark) -> None:
+        """The correctness gate over the backlog (once per run), then a short
+        scored drain, so both the aggregate and the bridge are warm."""
         from big_data_analytics_project_spark.streaming import bridge
 
+        if not self.checked:
+            self._check_backlog(spark)
+            self.checked = True
         agg, timed = _scoring(spark, self.warm_backlog, os.path.join(self.dir, "warm.json"), 1)
         bridge.run_scored_stream(agg, timed)
 
@@ -120,8 +131,9 @@ class Workload:
         staging = fresh_dir(os.path.join(self.dir, "staging"))
         ckpt = fresh_dir(os.path.join(self.dir, "open-ckpt"))
         store = os.path.join(self.dir, "open-metrics.json")
-        tick = seconds / OPEN_FILES
-        per_file = max(1, round(EVENT_RATE * tick))
+        tick = TICK_S
+        per_file = round(EVENT_RATE * tick)
+        n_files = max(PRIME_FILES + MIN_SAMPLED_FILES, round(seconds / tick))
         agg, timed = _scoring(spark, live, store, 100_000)
         query = (agg.writeStream.outputMode("update").foreachBatch(timed)
                  .option("checkpointLocation", ckpt).queryName("perfbench_open_loop").start())
@@ -129,12 +141,12 @@ class Workload:
         t0 = time.time() + 1.0
         gen_proc = subprocess.Popen(
             [sys.executable, "-m", "perfbench.streamgen", "--out", live, "--staging", staging,
-             "--log", log_path, "--seed", str(self.seed), "--files", str(OPEN_FILES),
+             "--log", log_path, "--seed", str(self.seed), "--files", str(n_files),
              "--events-per-file", str(per_file), "--users", str(USERS),
              "--span-us", str(SPAN_US), "--t0", repr(t0), "--tick", repr(tick)])
         try:
             gen_proc.wait(timeout=seconds + 60)
-            names = [file_name(k) for k in range(OPEN_FILES)]
+            names = [file_name(k) for k in range(n_files)]
             deadline = time.time() + (QUIESCE_TIMEOUT_S if gen_proc.returncode == 0 else 0)
             while time.time() < deadline:
                 file_batch = self._file_batches(ckpt)
@@ -158,7 +170,7 @@ class Workload:
         missing = tracing.file_latencies(scheduled, file_batch, batch_end)[1]
         first_sampled = file_name(PRIME_FILES)
         sampled = {n: t for n, t in scheduled.items() if n >= first_sampled}
-        self.attempted += OPEN_FILES
+        self.attempted += n_files
         self.latencies += tracing.file_latencies(sampled, file_batch, batch_end)[0]
         self.bridge_calls += timed.calls
         self.open_log = {"tick_s": tick, "events_per_file": per_file,
@@ -166,8 +178,8 @@ class Workload:
                          "backlog_files_max": tracing.max_backlog(scheduled, file_batch, batch_end)}
         if gen_proc.returncode:
             self.failures.append(f"open loop: generator exited with {gen_proc.returncode}")
-        if missing or len(scheduled) != OPEN_FILES:
-            self.failures.append(f"open loop: {missing} of {OPEN_FILES} files never scored")
+        if missing or len(scheduled) != n_files:
+            self.failures.append(f"open loop: {missing} of {n_files} files never scored")
         batches = len({file_batch[n] for n in scheduled if n in file_batch})
         if _store_entries(store) != batches:
             self.failures.append(f"open loop: metrics JSON holds {_store_entries(store)} "
@@ -185,17 +197,20 @@ class Workload:
         return tracing.parse_file_source_log(texts)
 
     # -- (b) drain ---------------------------------------------------------------
-    def _drain(self, spark) -> None:
+    def _drain(self, spark, name: str) -> None:
         from big_data_analytics_project_spark.streaming import bridge
 
-        store = os.path.join(self.dir, "drain-metrics.json")
+        store = os.path.join(self.dir, f"drain-{name}-metrics.json")
         agg, timed = _scoring(spark, self.backlog, store, 1)
         t0 = time.time()
         with self.tracer.span("streaming.bridge.run_scored_stream"):
             bridge.run_scored_stream(agg, timed)
         t1 = time.time()
         self.attempted += DRAIN_FILES
-        self.drain_rates.append(self.drain_events / (t1 - t0))
+        scored = {m["batch_id"] for m in timed.bridge.batches}
+        self.drain_batch_s += tracing.batch_intervals(
+            t0, [end for b, _, end in timed.calls if b in scored])
+        self.drain_wall_rates.append(self.drain_events / (t1 - t0))
         self.bridge_calls += timed.calls
         if len(timed.bridge.batches) != DRAIN_FILES or _store_entries(store) != DRAIN_FILES:
             self.failures.append(
@@ -203,18 +218,26 @@ class Workload:
                 f"{_store_entries(store)} metrics entries for {DRAIN_FILES} files")
 
     def measure(self, spark, seconds: float) -> None:
+        # A drain is a few short batches; draining on both sides of the open
+        # loop samples the host's load at two moments instead of one.
+        self._drain(spark, "before")
         self._open_loop(spark, seconds * OPEN_SHARE)
-        self._drain(spark)
+        self._drain(spark, "after")
 
     def check(self, spark) -> None:
-        """Untimed: the streamed aggregate of the backlog equals a DuckDB
-        batch aggregate of the same files, except for the HLL column."""
+        """The gate ran during warmup, before the timed region."""
+
+    def _check_backlog(self, spark) -> None:
+        """The streamed aggregate of the backlog equals a DuckDB batch
+        aggregate of the same files, except for the HLL column.  The stream
+        reads one file per micro-batch, as the drain does, so the final
+        table depends on state carried across every batch."""
         from big_data_analytics_project_spark.streaming import processor
 
         import duckdb
 
         agg = processor.tumbling_features(
-            processor.read_event_stream(spark, self.backlog, max_files_per_trigger=100_000))
+            processor.read_event_stream(spark, self.backlog, max_files_per_trigger=1))
         got = (processor.run_to_completion(agg, "perfbench_stream_check", "complete")
                .selectExpr("win.start AS win_start", "user_id", "label", "view_count",
                            "total_events", "total_value", "last_event_time")
@@ -251,7 +274,9 @@ class Workload:
     def end_to_end(self) -> dict[str, float]:
         self.tail_q, tail = tracing.tail_percentile(self.latencies)
         return {"primary_s": tracing.median(self.latencies), "secondary_s": tail,
-                "throughput_per_s": tracing.median(self.drain_rates)}
+                # one file per micro-batch: a file's events over the median
+                # batch time, so the query's start-up and a slow batch drop out
+                "throughput_per_s": DRAIN_EVENTS_PER_FILE / tracing.median(self.drain_batch_s)}
 
     def named(self, e2e: dict) -> dict:
         return {"stream_latency_p50_s": (e2e["primary_s"], "s"),
@@ -260,4 +285,5 @@ class Workload:
 
     def report(self) -> dict:
         return {"inputs": self.inputs, "open_loop": self.open_log,
-                "latency_samples": len(self.latencies)}
+                "latency_samples": len(self.latencies),
+                "drain_events_per_wall_s": self.drain_wall_rates}

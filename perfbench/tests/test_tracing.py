@@ -60,6 +60,12 @@ def test_file_latencies_and_backlog():
     assert tracing.max_backlog(scheduled, file_batch, batch_end) == 1
 
 
+def test_batch_intervals_run_from_the_previous_batch_end():
+    # ends arrive out of order; the first batch is timed from the drain's start
+    assert tracing.batch_intervals(100.0, [103.5, 102.0, 104.0]) == pytest.approx([2.0, 1.5, 0.5])
+    assert tracing.batch_intervals(100.0, []) == []
+
+
 # -- event-log reduction ---------------------------------------------------------
 
 def _task(stage, launch_ms, finish_ms, **metrics):

@@ -70,6 +70,13 @@ def file_latencies(scheduled: dict[str, float], file_batch: dict[str, int],
     return lat, missing
 
 
+def batch_intervals(start: float, ends: Iterable[float]) -> list[float]:
+    """Wall time of each micro-batch of a drain that began at ``start``: from
+    the end of the batch before it (the first from ``start``) to its end."""
+    ends = sorted(ends)
+    return [b - a for a, b in zip([start] + ends[:-1], ends)]
+
+
 def max_backlog(scheduled: dict[str, float], file_batch: dict[str, int],
                 batch_end: dict[int, float]) -> int:
     """Most files written but not yet scored, sampled at each batch end."""
