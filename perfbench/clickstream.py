@@ -21,7 +21,7 @@ from .harness import fresh_dir
 
 N_SESSIONS = 50_000          # ≈ 325 k events, ≈ 30 MB of CSV
 WARMUP_ITERATIONS = 1
-MIN_ITERATIONS = 3
+MIN_ITERATIONS = 2
 # Floors for the four model metrics on this generator's data; the seeded
 # values sit well above them (see README.md).
 METRIC_FLOORS = {"auc": 0.70, "f1": 0.60, "weighted_recall": 0.60, "accuracy": 0.60}
