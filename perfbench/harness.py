@@ -1,5 +1,5 @@
 """Run plumbing shared by the workloads: the Spark session's lifetime,
-benchmark-side spans, set-up rounds and resource readings.
+benchmark-side spans, cold starts and resource readings.
 
 Nothing here reaches inside the program: spans are taken around calls into
 its public modules, and per-layer numbers come from Spark's own event log
@@ -11,13 +11,15 @@ from __future__ import annotations
 import os
 import shutil
 import subprocess
+import sys
+import threading
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from . import tracing
-
-SETUP_ROUNDS = 5
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+COLD_STARTS = 2  # per untraced run: the run's own and one in a fresh process
+COLD_START_TAG = "perfbench-cold-start-s"
 
 
 @dataclass
@@ -65,8 +67,8 @@ class Tracer:
 
 class Session:
     """Owns the SparkSession and the JVM behind it.  ``stop`` then ``start``
-    gives a fresh session in the same JVM (a set-up round); ``close`` stops
-    the session, shuts the JVM down and waits for it to exit."""
+    gives a fresh session in the same JVM; ``close`` stops the session,
+    shuts the JVM down and waits for it to exit."""
 
     def __init__(self, work: str, event_log: str | None):
         self.work = work
@@ -149,27 +151,54 @@ def fresh_dir(path: str) -> str:
     return path
 
 
-def run_setup_rounds(session: Session, tracer: Tracer) -> tuple[float, list[float]]:
-    """Start the program, then set it up again ``SETUP_ROUNDS`` times.
+def process_age() -> float:
+    """Seconds since this process started: its start in /proc/self/stat,
+    in clock ticks since boot, against the boot-time clock."""
+    with open("/proc/self/stat") as f:
+        fields = f.read().rsplit(")", 1)[1].split()
+    return time.clock_gettime(time.CLOCK_BOOTTIME) - int(fields[19]) / os.sysconf("SC_CLK_TCK")
 
-    The cold start runs from process start (interpreter, imports, the JVM
-    launch) to a SparkSession from ``session.get_spark`` with the registry
-    loaded.  Each set-up round then stops the session and times only the
-    program's set-up calls: a fresh ``get_spark`` in the running JVM and
-    ``registry.load_all``.  Returns the cold start and each round's time."""
+
+def cold_start(session: Session, tracer: Tracer) -> float:
+    """Set the program up: ``session.get_spark`` (which launches the JVM)
+    and ``registry.load_all``.  Returns the time from process start
+    (interpreter, imports, the JVM launch) to that point."""
     from big_data_analytics_project_spark import registry
 
-    def set_up() -> None:
-        session.start(tracer)
-        with tracer.span("registry.load_all"):
-            registry.load_all()
+    session.start(tracer)
+    with tracer.span("registry.load_all"):
+        registry.load_all()
+    return process_age()
 
-    set_up()
-    cold = time.time() - tracing.process_start_time()
-    rounds = []
-    for _ in range(SETUP_ROUNDS):
-        session.stop()
-        t0 = time.perf_counter()
-        set_up()
-        rounds.append(time.perf_counter() - t0)
-    return cold, rounds
+
+def child_cold_starts(work: str, n: int) -> list[float]:
+    """``n`` cold starts, one after another, each in a fresh Python process
+    (``perfbench.coldstart``) that imports what ``run.py`` imports and calls
+    ``cold_start``.  Each child is shut down, JVM included, before the next
+    starts."""
+    times = []
+    for k in range(n):
+        child_work = fresh_dir(os.path.join(work, f"cold-{k}"))
+        os.makedirs(os.path.join(child_work, "tmp"))
+        proc = subprocess.Popen([sys.executable, "-m", "perfbench.coldstart", child_work],
+                                cwd=ROOT, stdin=subprocess.PIPE, stdout=subprocess.PIPE,
+                                text=True)
+        age = None
+        watchdog = threading.Timer(120, proc.kill)  # a child that hangs fails the run
+        watchdog.start()
+        try:
+            for line in proc.stdout:  # the JVM may write to the same stdout
+                if line.startswith(COLD_START_TAG):
+                    age = float(line.split()[1])
+                    break
+            proc.stdin.close()  # the child shuts down on EOF of its stdin
+            proc.wait()
+        finally:
+            watchdog.cancel()
+            if proc.poll() is None:
+                proc.kill()
+                proc.wait()
+        if proc.returncode or age is None:
+            raise RuntimeError(f"cold start {k} exited with {proc.returncode}")
+        times.append(age)
+    return times

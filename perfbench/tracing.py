@@ -13,15 +13,6 @@ from collections.abc import Iterable
 from dataclasses import dataclass, field
 
 
-def process_start_time() -> float:
-    """Epoch seconds at which this process started (from /proc)."""
-    with open("/proc/stat") as f:
-        btime = next(int(line.split()[1]) for line in f if line.startswith("btime"))
-    with open("/proc/self/stat") as f:
-        fields = f.read().rsplit(")", 1)[1].split()
-    return btime + int(fields[19]) / os.sysconf("SC_CLK_TCK")
-
-
 def median(values: list[float]) -> float:
     return statistics.median(values)
 
