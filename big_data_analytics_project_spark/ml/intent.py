@@ -5,20 +5,28 @@ random undersampling to ≈1:1 → VectorAssembler → RandomForest(numTrees=20,
 maxDepth=5, seed=42; cloud profile 50/10) → AUC / F1 / weightedRecall /
 accuracy evaluation.
 
+One trainer, :func:`fit_and_evaluate`, does assemble → seeded 80/20
+split → fit → four metrics for every caller: the flagship RF
+(:func:`run_intent_pipeline`), the reference-parity clickstream job
+(``plans.clickstream.run_training``) and the logistic-regression
+contract.  Each passes its own MLlib estimator and feature columns; the
+tuning sweep shares the same :func:`assemble` step.
+
 Rebuild differences (SURVEY §3.2 / §4 inefficiency notes):
 - the feature table is produced in-engine by the flagship sessionization
   (operators/sessionization.py) instead of a pre-saved parquet;
-- the balanced training frame is cached before the multi-action
-  fit/evaluate sequence (the reference recomputes the full lineage for
-  every count/evaluate — its known inefficiency);
+- one caching rule: the trainer caches its train split and predictions,
+  never its input; callers with an expensive input lineage (the balanced
+  frame, a feature⋈label join) cache it first, so the fit/evaluate
+  sequence does not recompute it (the reference recomputes the full
+  lineage for every count/evaluate — its known inefficiency);
 - the count→ratio→sample round-trip is kept: it is inherent to
   count-based balancing and matches reference semantics (approximate 1:1,
-  not pandas-exact — SURVEY §7.2.7).
+  not pandas-exact — SURVEY §7.2.7); both class counts come from one
+  aggregate.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -35,72 +43,69 @@ def build_feature_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def undersample(df: DataFrame, label_col: str = "label", seed: int = 42) -> DataFrame:
     """Count-based majority undersampling to ≈1:1 (reference
-    train_intent.py:51-79).  Two count actions + seeded Bernoulli sample;
-    the ratio crosses to the driver by design."""
-    minority = df.where(F.col(label_col) == 1)
-    majority = df.where(F.col(label_col) == 0)
-    n_min, n_maj = minority.count(), majority.count()
+    train_intent.py:51-79).  Both class counts come from one
+    ``groupBy(label)`` aggregate (a missing class counts 0), then a
+    seeded Bernoulli sample; the ratio crosses to the driver by design."""
+    counts = dict(df.groupBy(label_col).count().collect())
+    n_min, n_maj = counts.get(1, 0), counts.get(0, 0)
     if n_maj == 0 or n_min == 0 or n_min >= n_maj:
         return df
+    minority = df.where(F.col(label_col) == 1)
+    majority = df.where(F.col(label_col) == 0)
     return minority.union(majority.sample(fraction=n_min / n_maj, seed=seed))
 
 
-@dataclass
-class IntentMetrics:
-    auc: float
-    f1: float
-    weighted_recall: float
-    accuracy: float
-    n_train: int
-    n_test: int
+def assemble(features: DataFrame, feature_cols=FEATURES) -> DataFrame:
+    """(label double, features vector) with numeric nulls as 0 — the one
+    assembly step every trainer and the tuning sweep share."""
+    from pyspark.ml.feature import VectorAssembler
+
+    return (
+        VectorAssembler(inputCols=list(feature_cols), outputCol="features")
+        .transform(features.fillna(0))
+        .select(F.col("label").cast("double"), "features")
+    )
 
 
-def train_intent_model(
-    features: DataFrame,
-    num_trees: int = 20,
-    max_depth: int = 5,
-    seed: int = 42,
+def fit_and_evaluate(
+    features: DataFrame, estimator, feature_cols=FEATURES, seed: int = 42
 ):
-    """Assemble → split → RF fit → 4-metric evaluation (M1-M5)."""
-    from pyspark.ml.classification import RandomForestClassifier
+    """Assemble → seeded 80/20 split → fit ``estimator`` → AUC / F1 /
+    weighted recall / accuracy (M1-M5).  The one trainer: every caller
+    passes its MLlib classifier (default ``label``/``features`` columns).
+
+    Caches ``train`` (the fit reads it once per iteration or tree level)
+    and ``pred`` (four evaluators read it) and never its input: a caller
+    whose input is an expensive lineage caches it first, since the split
+    and the prediction each read it once.  Returns
+    ``(model, metrics, train, pred)``; callers that report split sizes
+    count the cached ``train`` and ``pred`` themselves."""
     from pyspark.ml.evaluation import (
         BinaryClassificationEvaluator,
         MulticlassClassificationEvaluator,
     )
-    from pyspark.ml.feature import VectorAssembler
 
-    assembler = VectorAssembler(inputCols=FEATURES, outputCol="features")
-    data = assembler.transform(features.fillna(0)).select("label", "features")
-    train, test = data.randomSplit([0.8, 0.2], seed=seed)
+    train, test = assemble(features, feature_cols).randomSplit([0.8, 0.2], seed=seed)
     train = train.cache()
-    test = test.cache()
-    rf = RandomForestClassifier(
-        labelCol="label", featuresCol="features",
-        numTrees=num_trees, maxDepth=max_depth, seed=seed,
-    )
-    model = rf.fit(train)
+    model = estimator.fit(train)
     pred = model.transform(test).cache()
-    auc = BinaryClassificationEvaluator(
-        labelCol="label", metricName="areaUnderROC"
-    ).evaluate(pred)
-    mc = MulticlassClassificationEvaluator(labelCol="label", predictionCol="prediction")
-    metrics = IntentMetrics(
-        auc=auc,
-        f1=mc.setMetricName("f1").evaluate(pred),
-        weighted_recall=mc.setMetricName("weightedRecall").evaluate(pred),
-        accuracy=mc.setMetricName("accuracy").evaluate(pred),
-        n_train=train.count(),
-        n_test=test.count(),
-    )
-    return model, metrics
+    auc = BinaryClassificationEvaluator(metricName="areaUnderROC").evaluate(pred)
+    mc = MulticlassClassificationEvaluator()
+    metrics = {"auc": auc}
+    for key, name in (("f1", "f1"), ("weighted_recall", "weightedRecall"),
+                      ("accuracy", "accuracy")):
+        metrics[key] = mc.evaluate(pred, {mc.metricName: name})
+    return model, metrics, train, pred
 
 
-def run_intent_pipeline(spark: SparkSession, sf_dir: str,
-                        num_trees: int = 20, max_depth: int = 5) -> IntentMetrics:
-    feats = build_feature_table(spark, sf_dir)
-    balanced = undersample(feats).cache()
-    _, metrics = train_intent_model(balanced, num_trees, max_depth)
-    return metrics
+def run_intent_pipeline(features: DataFrame):
+    """Undersample the feature table, cache the balanced frame and train
+    the reference's seeded RandomForest(20, 5) on it; returns what
+    :func:`fit_and_evaluate` returns."""
+    from pyspark.ml.classification import RandomForestClassifier
+
+    rf = RandomForestClassifier(numTrees=20, maxDepth=5, seed=42)
+    return fit_and_evaluate(undersample(features).cache(), rf)
 
 
 def save_intent_model(model, path: str) -> None:
@@ -140,12 +145,10 @@ def tune_intent_model(
     """
     from pyspark.ml.classification import RandomForestClassifier
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
-    from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.tuning import ParamGridBuilder, TrainValidationSplit
 
-    assembler = VectorAssembler(inputCols=FEATURES, outputCol="features")
-    data = assembler.transform(features.fillna(0)).select("label", "features").cache()
-    rf = RandomForestClassifier(labelCol="label", featuresCol="features", seed=seed)
+    data = assemble(features).cache()
+    rf = RandomForestClassifier(seed=seed)
     grid = (
         ParamGridBuilder()
         .addGrid(rf.numTrees, list(num_trees_grid))
@@ -155,9 +158,7 @@ def tune_intent_model(
     tvs = TrainValidationSplit(
         estimator=rf,
         estimatorParamMaps=grid,
-        evaluator=BinaryClassificationEvaluator(
-            labelCol="label", metricName="areaUnderROC"
-        ),
+        evaluator=BinaryClassificationEvaluator(metricName="areaUnderROC"),
         trainRatio=0.75,
         parallelism=2,
         seed=seed,
@@ -173,62 +174,3 @@ def tune_intent_model(
         for pm, m in zip(grid, fitted.validationMetrics)
     ]
     return fitted.bestModel, rows
-
-
-def train_logreg_model(
-    features: DataFrame,
-    max_iter: int = 50,
-    reg_param: float = 0.01,
-    seed: int = 42,
-):
-    """Logistic-regression twin of ``train_intent_model`` (5th MLlib
-    surface under the contract pattern): same FEATURES assembly, same
-    seeded 80/20 split, LBFGS-fit LR.  LR is the scale-default baseline
-    classifier — one pass per iteration, no per-tree shuffles — so a
-    deployment would A/B it against the RF before paying tree training
-    at 100 TB.  Returns (model, IntentMetrics)."""
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.evaluation import (
-        BinaryClassificationEvaluator,
-        MulticlassClassificationEvaluator,
-    )
-    from pyspark.ml.feature import VectorAssembler
-
-    assembler = VectorAssembler(inputCols=FEATURES, outputCol="features")
-    # cache the assembled frame BEFORE the split: train.cache() and
-    # test.cache() materialize at different actions (fit vs evaluate),
-    # so an uncached parent runs the whole upstream feature pipeline
-    # twice.  train_intent_model deliberately does NOT do this — its
-    # callers pass an already-cached balanced frame, where a second
-    # cache layer measured as pure overhead (r16 A/B); the logreg
-    # contract passes an uncached feature⋈label join, where this cache
-    # measured 4.9 → 4.4 s.  The split itself is unchanged (randomSplit
-    # is deterministic in the parent's partitioning, which caching
-    # preserves).
-    data = assembler.transform(features.fillna(0)).select("label", "features").cache()
-    train, test = data.randomSplit([0.8, 0.2], seed=seed)
-    train = train.cache()
-    test = test.cache()
-    lr = LogisticRegression(
-        labelCol="label",
-        featuresCol="features",
-        maxIter=max_iter,
-        regParam=reg_param,
-    )
-    model = lr.fit(train)
-    pred = model.transform(test).cache()
-    auc = BinaryClassificationEvaluator(
-        labelCol="label", metricName="areaUnderROC"
-    ).evaluate(pred)
-    mc = MulticlassClassificationEvaluator(
-        labelCol="label", predictionCol="prediction"
-    )
-    metrics = IntentMetrics(
-        auc=auc,
-        f1=mc.evaluate(pred, {mc.metricName: "f1"}),
-        weighted_recall=mc.evaluate(pred, {mc.metricName: "weightedRecall"}),
-        accuracy=mc.evaluate(pred, {mc.metricName: "accuracy"}),
-        n_train=train.count(),
-        n_test=test.count(),
-    )
-    return model, metrics

@@ -108,11 +108,12 @@ def inplan_global_rank(
       ``reliable_pin`` trade-off documented there); rank callers are
       single-action queries where a retry re-runs the whole plan.
     - per-partition counts fold into exclusive offsets (and the total)
-      through ONE running-sum window over the ≤``defaultParallelism``
-      count rows — a single-task exchange over ≤parts ROWS (never data;
-      the r16 all-pairs broadcast fold was O(parts²) joined rows, which
-      is real overhead at cluster-scale ``defaultParallelism``), no
-      driver ``collect``, no ``createDataFrame`` round-trip.
+      through ONE bounded broadcast join over the ≤``defaultParallelism``
+      per-partition counts (≤ parts² joined ROWS, never data) — no
+      ``Exchange SinglePartition`` anywhere, no driver ``collect``, no
+      ``createDataFrame`` round-trip.  A running-sum window over the
+      counts would need a partitionless ``Window.orderBy``, i.e. exactly
+      the single-reducer exchange this operator exists to avoid.
 
     Callers must order by a UNIQUE compound (tie-break on an id), as with
     ``distributed_global_rank``.
@@ -125,27 +126,24 @@ def inplan_global_rank(
         .localCheckpoint(eager=False)
     )
     counts = pinned.groupBy("__pid").agg(F.count("*").alias("__cnt"))
-    wo = Window.orderBy("__pid")
-    off_cols = [
+    other = counts.select(
+        F.col("__pid").alias("__pid_b"), F.col("__cnt").alias("__cnt_b")
+    )
+    off_aggs = [
         F.coalesce(
-            F.sum("__cnt").over(wo.rowsBetween(Window.unboundedPreceding, -1)),
+            F.sum(F.when(F.col("__pid_b") < F.col("__pid"), F.col("__cnt_b"))),
             F.lit(0),
         )
         .cast("long")
         .alias("__off")
     ]
     if n_col is not None:
-        off_cols.append(
-            F.sum("__cnt")
-            .over(
-                wo.rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            )
-            .cast("long")
-            .alias(n_col)
-        )
-    off = counts.select("__pid", *off_cols)
+        off_aggs.append(F.sum("__cnt_b").cast("long").alias(n_col))
+    off = (
+        counts.join(F.broadcast(other), F.lit(True))
+        .groupBy("__pid")
+        .agg(*off_aggs)
+    )
     wp = Window.partitionBy("__pid").orderBy(*cols)
     return (
         pinned.withColumn("__rn", F.row_number().over(wp))

@@ -4,8 +4,12 @@
 Entry point 1 (preprocess): ``run_preprocessing(spark, csv, out)`` ↔
 reference ``src/spark/preprocessing.py:127-141`` — load+clean → leakage
 cutoff → session features → parquet.
-Entry point 2 (train): ``run_training(spark, features_path)`` ↔
-``src/spark/train_intent.py:140-159`` — undersample → RF → metrics.
+Entry point 2 (train): ``run_training(spark, features)`` ↔
+``src/spark/train_intent.py:140-159`` — undersample → RF → metrics.  It
+is a thin caller of the engine's one trainer,
+``ml.intent.fit_and_evaluate`` (assemble → seeded split → fit → four
+metrics), which the flagship RF and the logistic-regression contract
+share.
 Entry point 3 (stream): see ``streaming/`` (processor + bridge).
 
 Fidelity notes:
@@ -17,7 +21,8 @@ Fidelity notes:
 - the cutoff keeps ties (``<=``), numeric nulls → 0, dimension nulls →
   'unknown', exactly as the reference.
 - statistics that the reference recomputes per action are taken from one
-  cached frame (its known missing-cache inefficiency, SURVEY §3.1).
+  cached frame (its known missing-cache inefficiency, SURVEY §3.1), in
+  one aggregate pass: session and purchase counts together.
 """
 
 from __future__ import annotations
@@ -31,6 +36,10 @@ from ..operators.sessionization import (
 )
 from ..sources.readers import read_clickstream_csv
 from ..sources.sinks import write_parquet
+
+# the reference §1.3 session features the model trains on
+FEATURES = ["view_count", "cart_count", "session_duration",
+            "avg_price", "max_price", "unique_items"]
 
 
 def engineer_session_features(events: DataFrame) -> DataFrame:
@@ -68,8 +77,8 @@ def run_preprocessing(
     """Entry point 1: CSV → cleaned events → session features (+ stats)."""
     events = read_clickstream_csv(spark, input_csv)
     features = engineer_session_features(events).cache()
-    total = features.count()
-    purchases = features.where(F.col("label") == 1).count()
+    total, purchases = features.agg(F.count("*"), F.sum("label")).first()
+    purchases = purchases or 0
     stats = {
         "n_sessions": total,
         "n_purchase_sessions": purchases,
@@ -87,38 +96,15 @@ def run_training(
     max_depth: int = 5,
     seed: int = 42,
 ):
-    """Entry point 2: undersample → assemble → RF → 4 metrics (reference
-    hyperparameter profiles: local 20/5, cloud 50/10)."""
+    """Entry point 2: undersample → cache → the shared trainer
+    (``ml.intent.fit_and_evaluate``) with a seeded RF on the reference
+    §1.3 features (reference hyperparameter profiles: local 20/5, cloud
+    50/10).  Returns ``(model, metrics)``."""
     from pyspark.ml.classification import RandomForestClassifier
-    from pyspark.ml.evaluation import (
-        BinaryClassificationEvaluator,
-        MulticlassClassificationEvaluator,
-    )
-    from pyspark.ml.feature import VectorAssembler
 
-    from ..ml.intent import undersample
+    from ..ml.intent import fit_and_evaluate, undersample
 
-    feature_cols = ["view_count", "cart_count", "session_duration",
-                    "avg_price", "max_price", "unique_items"]
     balanced = undersample(features, seed=seed).cache()
-    data = (
-        VectorAssembler(inputCols=feature_cols, outputCol="features")
-        .transform(balanced.fillna(0))
-        .select(F.col("label").cast("double"), "features")
-    )
-    train, test = data.randomSplit([0.8, 0.2], seed=seed)
-    model = RandomForestClassifier(
-        labelCol="label", featuresCol="features",
-        numTrees=num_trees, maxDepth=max_depth, seed=seed,
-    ).fit(train.cache())
-    pred = model.transform(test).cache()
-    mc = MulticlassClassificationEvaluator(labelCol="label", predictionCol="prediction")
-    metrics = {
-        "auc": BinaryClassificationEvaluator(
-            labelCol="label", metricName="areaUnderROC"
-        ).evaluate(pred),
-        "f1": mc.setMetricName("f1").evaluate(pred),
-        "weighted_recall": mc.setMetricName("weightedRecall").evaluate(pred),
-        "accuracy": mc.setMetricName("accuracy").evaluate(pred),
-    }
+    rf = RandomForestClassifier(numTrees=num_trees, maxDepth=max_depth, seed=seed)
+    model, metrics, _, _ = fit_and_evaluate(balanced, rf, FEATURES, seed)
     return model, metrics

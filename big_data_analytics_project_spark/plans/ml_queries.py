@@ -14,11 +14,12 @@ from ..registry import query
 def ml_intent_rf_metrics(spark, sf_dir):
     """M1-M5: undersample → assemble → RandomForest(20,5,seed42) → AUC/F1/
     recall/accuracy, as a single-row metrics frame."""
-    from ..ml.intent import run_intent_pipeline
+    from ..ml.intent import build_feature_table, run_intent_pipeline
 
-    m = run_intent_pipeline(spark, sf_dir)
+    _, m, train, pred = run_intent_pipeline(build_feature_table(spark, sf_dir))
     return spark.createDataFrame(
-        [(m.auc, m.f1, m.weighted_recall, m.accuracy, m.n_train, m.n_test)],
+        [(m["auc"], m["f1"], m["weighted_recall"], m["accuracy"],
+          train.count(), pred.count())],
         "auc double, f1 double, weighted_recall double, accuracy double, n_train long, n_test long",
     )
 
@@ -28,10 +29,9 @@ def ml_feature_importances(spark, sf_dir):
     """M8: RandomForest feature importances (reference
     visualization.ipynb cell 13 / README feature table), as (feature,
     importance) rows sorted by weight."""
-    from ..ml.intent import FEATURES, build_feature_table, train_intent_model, undersample
+    from ..ml.intent import FEATURES, build_feature_table, run_intent_pipeline
 
-    feats = build_feature_table(spark, sf_dir)
-    model, _ = train_intent_model(undersample(feats).cache())
+    model, *_ = run_intent_pipeline(build_feature_table(spark, sf_dir))
     imps = list(model.featureImportances.toArray())
     rows = sorted(zip(FEATURES, imps), key=lambda kv: -kv[1])
     return spark.createDataFrame(
@@ -211,17 +211,17 @@ def ml_rf_quality_contract(spark, sf_dir):
     from ..ml.intent import FEATURES, build_feature_table, run_intent_pipeline
 
     feats = build_feature_table(spark, sf_dir)
-    m = run_intent_pipeline(spark, sf_dir)
+    _, m, train, pred = run_intent_pipeline(feats)
     return feats.agg(
         F.count("*").cast("long").alias("n_users"),
         F.sum("label").cast("long").alias("n_positive"),
         F.lit(20).cast("long").alias("n_trees"),
         F.lit(len(FEATURES)).cast("long").alias("n_features"),
-        F.lit(bool(m.auc >= 0.90)).alias("auc_ge_090"),
-        F.lit(bool(m.f1 >= 0.90)).alias("f1_ge_090"),
-        F.lit(bool(m.weighted_recall >= 0.90)).alias("recall_ge_090"),
-        F.lit(bool(m.accuracy >= 0.90)).alias("accuracy_ge_090"),
-        F.lit(bool(m.n_train > 0 and m.n_test > 0)).alias("split_nonempty"),
+        F.lit(bool(m["auc"] >= 0.90)).alias("auc_ge_090"),
+        F.lit(bool(m["f1"] >= 0.90)).alias("f1_ge_090"),
+        F.lit(bool(m["weighted_recall"] >= 0.90)).alias("recall_ge_090"),
+        F.lit(bool(m["accuracy"] >= 0.90)).alias("accuracy_ge_090"),
+        F.lit(train.count() > 0 and pred.count() > 0).alias("split_nonempty"),
     )
 
 
@@ -567,9 +567,10 @@ def ml_logreg_quality_contract(spark, sf_dir):
     target — see block comment."""
     import math
 
+    from pyspark.ml.classification import LogisticRegression
     from pyspark.sql import Window
 
-    from ..ml.intent import FEATURES, build_feature_table, train_logreg_model
+    from ..ml.intent import FEATURES, build_feature_table, fit_and_evaluate
     from ..sources import read_table
 
     ev = read_table(spark, sf_dir, "events")
@@ -591,12 +592,17 @@ def ml_logreg_quality_contract(spark, sf_dir):
             .alias("label")
         )
     ).cache()
+    # the join is cached because the trainer never caches its input: the
+    # split's train side (fit) and test side (evaluate) materialize at
+    # different actions and would each re-run the feature pipeline
     feats = (
         build_feature_table(spark, sf_dir)
         .drop("label")
         .join(lab, "user_id")
+        .cache()
     )
-    model, m = train_logreg_model(feats, max_iter=_LOGREG_MAX_ITER)
+    lr = LogisticRegression(maxIter=_LOGREG_MAX_ITER, regParam=0.01)
+    model, m, train, pred = fit_and_evaluate(feats, lr)
     coefs = list(model.coefficients) + [model.intercept]
     finite = all(math.isfinite(c) for c in coefs)
     return lab.agg(
@@ -604,8 +610,8 @@ def ml_logreg_quality_contract(spark, sf_dir):
         F.sum("label").cast("long").alias("n_positive"),
         F.lit(_LOGREG_MAX_ITER).cast("long").alias("max_iter"),
         F.lit(len(FEATURES)).cast("long").alias("n_features"),
-        F.lit(bool(m.auc >= 0.90)).alias("auc_ge_090"),
-        F.lit(bool(m.accuracy >= 0.90)).alias("accuracy_ge_090"),
+        F.lit(bool(m["auc"] >= 0.90)).alias("auc_ge_090"),
+        F.lit(bool(m["accuracy"] >= 0.90)).alias("accuracy_ge_090"),
         F.lit(bool(finite)).alias("coefficients_finite"),
-        F.lit(bool(m.n_train > 0 and m.n_test > 0)).alias("split_nonempty"),
+        F.lit(train.count() > 0 and pred.count() > 0).alias("split_nonempty"),
     )

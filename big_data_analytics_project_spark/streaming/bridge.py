@@ -209,19 +209,10 @@ def run_foreach_batch(
     query's lifetime — sized for batch shuffles, not per-trigger state
     volume.  Map-only upstreams (the index-ingest drains) have no state
     store and pass ``None``."""
-    from .processor import _state_partitions
+    from .processor import drain_available
 
-    spark = df.sparkSession
-    with tempfile.TemporaryDirectory(prefix="bdap_ckpt_") as ckpt:
-        with _state_partitions(spark, state_partitions):
-            q = (
-                df.writeStream.outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .foreachBatch(fn)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    writer = df.writeStream.outputMode(output_mode).foreachBatch(fn)
+    drain_available(df.sparkSession, writer, state_partitions)
 
 
 def run_scored_stream(
@@ -265,7 +256,6 @@ def run_fanout_stream(
     alerting is the canonical trio).  Exactly-once then rests on each
     writer's (batch_id, data) idempotence, e.g.
     :func:`idempotent_parquet_writer`."""
-    from .processor import _state_partitions
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
@@ -275,16 +265,7 @@ def run_fanout_stream(
         finally:
             batch_df.unpersist()
 
-    spark = stream_df.sparkSession
-    with tempfile.TemporaryDirectory(prefix="bdap_ckpt_") as ckpt:
-        with _state_partitions(spark, state_partitions):
-            q = (
-                stream_df.writeStream.option("checkpointLocation", ckpt)
-                .foreachBatch(handle)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    run_foreach_batch(stream_df, handle, "append", state_partitions)
 
 
 class RedisMetricsStore:
@@ -415,8 +396,6 @@ def run_scd2_stream(
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    from .processor import _state_partitions
-
     spark = stream.sparkSession
     key_t = stream.schema[key].dataType.simpleString()
     attr_t = stream.schema[attr].dataType.simpleString()
@@ -466,15 +445,7 @@ def run_scd2_stream(
             f"{snapshot_dir}/version={batch_id}"
         )
 
-    with tempfile.TemporaryDirectory(prefix="bdap_ckpt_") as ckpt:
-        with _state_partitions(spark, state_partitions):
-            q = (
-                stream.writeStream.option("checkpointLocation", ckpt)
-                .foreachBatch(apply)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    run_foreach_batch(stream, apply, "append", state_partitions)
     versions = sorted(
         int(d.split("=")[1])
         for d in list_subdir_names(spark, snapshot_dir)

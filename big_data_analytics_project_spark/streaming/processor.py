@@ -31,6 +31,7 @@ import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..schemas import EVENTS
 
@@ -379,6 +380,25 @@ class _state_partitions:
                 self.spark.conf.set(key, prev)
 
 
+def drain_available(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    state_partitions: int | None = None,
+    rocksdb: bool = False,
+) -> None:
+    """Run a configured ``writeStream`` over all available input and wait
+    for it: availableNow trigger (a deterministic micro-batch sequence),
+    a throwaway ``bdap_ckpt_`` checkpoint deleted on return, and the
+    state settings of :class:`_state_partitions` in force before
+    ``start()`` (Spark reads them when the query starts).  Every drain in
+    ``processor`` and ``bridge`` goes through here."""
+    with tempfile.TemporaryDirectory(prefix="bdap_ckpt_") as ckpt:
+        with _state_partitions(spark, state_partitions, rocksdb):
+            writer.option("checkpointLocation", ckpt).trigger(
+                availableNow=True
+            ).start().awaitTermination()
+
+
 def run_to_completion(
     agg: DataFrame,
     query_name: str,
@@ -395,17 +415,12 @@ def run_to_completion(
     the bounded oracle harness (the driver diffs one final table).  The
     production path at scale is :func:`run_append_to_files`."""
     spark = agg.sparkSession
-    with tempfile.TemporaryDirectory(prefix="bdap_ckpt_") as ckpt:
-        with _state_partitions(spark, state_partitions, rocksdb):
-            q = (
-                agg.writeStream.outputMode(output_mode)
-                .format("memory")
-                .queryName(query_name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    drain_available(
+        spark,
+        agg.writeStream.outputMode(output_mode).format("memory").queryName(query_name),
+        state_partitions,
+        rocksdb,
+    )
     return spark.table(query_name)
 
 
@@ -430,17 +445,12 @@ def run_append_to_files(
     returned with the aggregate's schema when no window finalized at all.
     """
     spark = agg.sparkSession
-    with tempfile.TemporaryDirectory(prefix="bdap_ckpt_") as ckpt:
-        with _state_partitions(spark, state_partitions, rocksdb):
-            q = (
-                agg.writeStream.outputMode("append")
-                .format(fmt)
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    drain_available(
+        spark,
+        agg.writeStream.outputMode("append").format(fmt).option("path", out_dir),
+        state_partitions,
+        rocksdb,
+    )
     has_data = any(
         f.startswith("part-") for f in os.listdir(out_dir) if not f.startswith(".")
     )

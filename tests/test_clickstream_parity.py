@@ -121,3 +121,58 @@ def test_training_on_synthetic(spark, tmp_path):
     assert all(k in metrics for k in ("f1", "weighted_recall", "accuracy"))
     assert metrics["auc"] >= 0.63, metrics
     assert metrics["f1"] >= 0.54, metrics
+
+
+def _jobs_submitted(spark, group: str, fn) -> int:
+    """Number of Spark jobs ``fn`` submits, recorded through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stats_and_class_counts_take_one_aggregate_each(spark, tmp_path):
+    """The preprocessing stats (session and purchase counts) and the
+    undersampling class counts each cost the jobs of ONE aggregate over
+    their frame — one shared pass, not one count action per figure."""
+    from big_data_analytics_project_spark.ml.intent import undersample
+    from big_data_analytics_project_spark.plans.clickstream import (
+        engineer_session_features,
+    )
+    from big_data_analytics_project_spark.sources.readers import (
+        read_clickstream_csv,
+    )
+
+    csv_path = str(tmp_path / "clickstream.csv")
+    _make_csv(csv_path)
+    spark.catalog.clearCache()
+
+    # preprocessing: the first aggregate over the freshly cached features
+    # also materializes the cache, so the baseline is a one-aggregate
+    # first action over the same (separately cached) frame
+    def one_pass():
+        feats = engineer_session_features(read_clickstream_csv(spark, csv_path))
+        feats.cache().agg(F.count("*")).collect()
+
+    baseline = _jobs_submitted(spark, "one_pass_features", one_pass)
+    spark.catalog.clearCache()
+    holder = {}
+    stats_jobs = _jobs_submitted(
+        spark, "run_preprocessing",
+        lambda: holder.update(features=run_preprocessing(spark, csv_path)[0]),
+    )
+    assert stats_jobs == baseline, (stats_jobs, baseline)
+
+    # undersampling over the now-materialized cached features: both class
+    # counts from one groupBy(label) aggregate
+    features = holder["features"]
+    baseline = _jobs_submitted(
+        spark, "one_pass_labels",
+        lambda: features.groupBy("label").count().collect(),
+    )
+    sample_jobs = _jobs_submitted(spark, "undersample", lambda: undersample(features))
+    assert sample_jobs == baseline, (sample_jobs, baseline)
+    spark.catalog.clearCache()

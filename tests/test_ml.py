@@ -15,10 +15,12 @@ def test_intent_pipeline_end_to_end(spark, sf_dir):
     (reference baseline on real data: AUC 0.9276, BASELINE.md).  Any dip
     below the floor means the feature table, cutoff, or RF wiring
     drifted — all seeded, so this is deterministic."""
-    m = run_intent_pipeline(spark, sf_dir)
-    assert m.auc >= 0.99, m
-    assert m.f1 >= 0.99, m
-    assert m.n_train > 0 and m.n_test > 0
+    from big_data_analytics_project_spark.ml.intent import build_feature_table
+
+    _, m, train, pred = run_intent_pipeline(build_feature_table(spark, sf_dir))
+    assert m["auc"] >= 0.99, m
+    assert m["f1"] >= 0.99, m
+    assert train.count() > 0 and pred.count() > 0
 
 
 def test_undersample_balances(spark, sf_dir):
@@ -128,19 +130,21 @@ def test_mllib_model_save_load_roundtrip(spark, sf_dir, tmp_path):
     """S8: persist the trained RF with MLlib native persistence, reload,
     and require bit-identical predictions (probability vector and class)
     on a held-out frame."""
+    from pyspark.ml.classification import RandomForestClassifier
     from pyspark.ml.feature import VectorAssembler
 
     from big_data_analytics_project_spark.ml.intent import (
         FEATURES,
         build_feature_table,
+        fit_and_evaluate,
         load_intent_model,
         save_intent_model,
-        train_intent_model,
         undersample,
     )
 
     feats = undersample(build_feature_table(spark, sf_dir)).cache()
-    model, _ = train_intent_model(feats, num_trees=5, max_depth=3)
+    rf = RandomForestClassifier(numTrees=5, maxDepth=3, seed=42)
+    model, *_ = fit_and_evaluate(feats, rf)
     path = str(tmp_path / "rf_model")
     save_intent_model(model, path)
     reloaded = load_intent_model(path)
