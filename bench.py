@@ -2,11 +2,9 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Emission contract (hardened in round 7 — the round-6 single line embedding
-all per-query timings overflowed the driver's tail capture and the bench
-went ungraded): per-query timings stream as '#'-prefixed comment lines
-and are written to bench_queries.json; the LAST stdout line is ONE short
-machine-parseable JSON object:
+Output: the per-query timings are written to bench_queries.json and
+printed as one JSON line, then as '#'-prefixed comment lines; the LAST
+stdout line is ONE short machine-parseable JSON object:
   {"metric": "headline_total", "value": N, "unit": "sec", "sf": ...,
    "n_queries": K, "queries_file": "bench_queries.json"}
 
@@ -27,7 +25,7 @@ member; families of near-identical trivial variants (the seven set-ops,
 the two scalar batteries) are represented by ONE delegate rather than
 every permutation, and a query is also added when it is individually
 expensive or exercises a distinct physical plan (iterative, streaming,
-two-pass rank) even if its family is already covered.  Enforced by
+global rank) even if its family is already covered.  Enforced by
 ``tests/test_bench_headline.py::test_every_family_represented`` — adding
 a query with a brand-new first tag without benching it fails that test.
 """
@@ -139,7 +137,7 @@ HEADLINE = [
     "attribution_first_last_touch",
     # in-plan closed-form OLS: BIGINT cent moments, two final divisions
     "regression_daily_revenue_trend",
-    # RFM quintiles via three two-pass distributed global ranks
+    # RFM quintiles via three in-plan global ranks
     "rfm_customer_segments",
     # chi-square independence: portable weekday, micro-quantized terms
     "abtest_chi_square_mix",
@@ -197,7 +195,7 @@ HEADLINE = [
     "multimodal_binary_dedup",
     # bucketed co-located join: write-time bucketing, exchange-free SMJ
     "layout_bucketed_join",
-    # curriculum tertiles: two-pass distributed rank + phase aggregate
+    # curriculum tertiles: in-plan global rank + phase aggregate
     "curriculum_phase_assignment",
     # U-shaped attribution: ppm-integer credit over the epoch machinery
     "attribution_position_weighted",
@@ -227,7 +225,7 @@ HEADLINE = [
     "eda_uniqueness_profile",
     # WoW revenue growth: integer epoch-week rollup + tiny lag window
     "revenue_wow_growth",
-    # top-share concentration: one user rollup + two-pass distributed rank
+    # top-share concentration: one user rollup + in-plan global rank
     "inequality_top_user_share",
     # langid confusion audit: map-only argmax + confusion-cell aggregate
     "quality_langid_mismatch",
@@ -405,34 +403,6 @@ HEADLINE = [
 ]
 
 
-def snapshot_provenance(prev: dict | None, timings: dict) -> dict:
-    """Back-to-back provenance for a bench_history snapshot (VERDICT r13
-    item 6): fold the prior same-round snapshot (if any) into this run's
-    record so the host-load uniformity test (docs/determinism.md) reads
-    straight off the file.  Pure function — unit-tested."""
-    prov: dict = {"run_totals": [], "median_ratio_vs_prev_run": None}
-    if prev:
-        prev_q = prev.get("queries", {})
-        # explicit membership + positive guard (ADVICE r14): a prior
-        # timing recorded as exactly 0.0 is EXCLUDED from the median
-        # ratio by design (it cannot be a denominator) — spelled out so
-        # the exclusion is intentional, not a truthiness accident
-        shared = [n for n in timings if n in prev_q and prev_q[n] > 0]
-        if shared:
-            import statistics
-
-            prov["median_ratio_vs_prev_run"] = round(
-                statistics.median(timings[n] / prev_q[n] for n in shared), 3
-            )
-        prov["run_totals"] = list(
-            prev.get("provenance", {}).get("run_totals")
-            or ([round(sum(prev_q.values()), 3)] if prev_q else [])
-        )
-    prov["run_totals"].append(round(sum(timings.values()), 3))
-    prov["run_index"] = len(prov["run_totals"])
-    return prov
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from big_data_analytics_project_spark.registry import load_all
@@ -464,7 +434,7 @@ def main() -> None:
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_N", "3")))
     # full passes over the query list (not back-to-back repeats): transient
     # host-load spikes then hit at most one of a query's n samples, so the
-    # per-query min is robust to the noise that inflated BENCH_r02
+    # per-query min is robust to it
     timings = {name: float("inf") for name in HEADLINE}
     for _ in range(n_runs):
         for name in HEADLINE:
@@ -484,13 +454,9 @@ def main() -> None:
     except ValueError:
         sf_val = sf
 
-    # Emission contract (hardened after BENCH_r06 arrived truncated): the
-    # machine-parsed summary line must stay compact — the 75-query timing
-    # map embedded in round 6's single line overflowed the driver's tail
-    # capture and the bench went ungraded ("parsed": null).  Per-query
-    # timings now go to a sidecar file plus '#'-prefixed comment lines
-    # (unparseable as JSON, so they can't shadow the summary), and the
-    # LAST stdout line is a short headline JSON that fits any tail buffer.
+    # Per-query timings go to bench_queries.json and to one JSON line;
+    # the '#'-prefixed lines are for reading, and the LAST stdout line is
+    # the short headline JSON, so a tail-only reader still parses it.
     detail = {
         "metric": "per_query",
         "unit": "sec",
@@ -498,74 +464,9 @@ def main() -> None:
         "queries": timings,
     }
     repo = os.path.dirname(os.path.abspath(__file__))
-    out_path = os.path.join(repo, "bench_queries.json")
-    with open(out_path, "w") as f:
+    with open(os.path.join(repo, "bench_queries.json"), "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
-    # Checked-in per-round history (VERDICT r8 item 7): BENCH_rN tails
-    # truncate to ~59 queries, so round-over-round comparison needs the
-    # full map.  The CURRENT round number is latest CORRECTNESS_r* + 1
-    # (the driver writes CORRECTNESS at round close); re-runs within a
-    # round overwrite the same snapshot — last wins.  Feed two snapshots
-    # to scripts/bench_compare.py (accepts bare 'r08'-style tokens).
-    # A bench re-run AFTER the driver has already dropped CORRECTNESS_rN
-    # (i.e. it measures round N, not N+1) must pin its target explicitly:
-    # SPARK_GRAFT_BENCH_ROUND=N (ADVICE r9: the r9 close-sweep snapshot
-    # had to be placed by hand while a stray r10.json appeared).
-    import glob
-    import re
-
-    round_env = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
-    if round_env:
-        snap_round = int(round_env)
-    else:
-        closed = [
-            int(m.group(1))
-            for p in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
-            if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-        ]
-        snap_round = max(closed, default=0) + 1
-    hist_dir = os.path.join(repo, "bench_history")
-    os.makedirs(hist_dir, exist_ok=True)
-    snap_path = os.path.join(hist_dir, f"r{snap_round:02d}.json")
-    # Back-to-back provenance (VERDICT r13 item 6): snapshots used to
-    # record only per-query seconds, so the host-load uniformity test
-    # (docs/determinism.md, "adjudicating bench variance") had to be
-    # re-derived by hand from sibling runs.  Each re-run within a round
-    # folds its predecessor in — see snapshot_provenance: a total that
-    # moved while median_ratio_vs_prev_run stays ~1.0x-uniform is
-    # co-tenant host load, not a regression.
-    prev = None
-    if os.path.exists(snap_path):
-        try:
-            with open(snap_path) as f:
-                prev = json.load(f)
-        except (ValueError, OSError):
-            prev = None  # unreadable prior snapshot: start fresh
-    detail["provenance"] = snapshot_provenance(prev, timings)
-    with open(snap_path, "w") as f:
-        json.dump(detail, f, indent=1, sort_keys=True)
-    # Machine-readable per-query line (round 17, VERDICT r16 item 1 —
-    # additions-only): PERF_r16.json had per_query={} because the only
-    # per-query record in stdout was the '#' comment lines, and the
-    # driver's 2000-char tail capture truncates them.  The full map is
-    # ~6.5 kB so it can NEVER fit inside that tail; instead it is printed
-    # here, BEFORE the comment lines, so (a) a parser that scans the whole
-    # stdout for JSON lines finds the complete map, and (b) the tail view
-    # — the '#' lines plus the short final summary line, which is what the
-    # driver is known to parse — stays byte-identical to every prior
-    # round.  The same map is also persisted to bench_queries.json and
-    # bench_history/r*.json (committed), which remain the durable record.
-    print(
-        json.dumps(
-            {
-                "metric": "per_query",
-                "unit": "sec",
-                "sf": sf_val,
-                "queries": timings,
-            },
-            sort_keys=True,
-        )
-    )
+    print(json.dumps(detail, sort_keys=True))
     for name in HEADLINE:
         print(f"# {name}: {timings[name]}")
     print(

@@ -2,34 +2,29 @@
 ``Window.orderBy(...)`` with no partition key.
 
 A global window funnels the whole dataset through ONE reducer; this is
-the classic two-pass alternative (the same shape ``zipWithIndex`` used in
-the RDD era, restated on DataFrames):
+the two-level alternative (the same shape ``zipWithIndex`` used in the
+RDD era, restated on DataFrames), all inside one physical plan:
 
 1. ``repartitionByRange`` on the sort key (sampling-based range
    partitioner — the same mechanism as a distributed ``orderBy``), then
    ``row_number`` WITHIN each range partition: parallel per-partition
    sorts, no single-reducer stage;
-2. per-partition counts → cumulative offsets (a partition-count-sized
-   driver array — the only ``collect`` — broadcast back) turn local row
-   numbers into global ranks.
+2. per-partition counts fold into exclusive offsets through a bounded
+   broadcast join over the per-partition count rows, which turn local
+   row numbers into global ranks.
 
-The range partitioning is materialized ONCE (``reliable_pin``):
-repartitionByRange samples to pick boundaries, so re-executing it in the
-counts job and the ranks job could yield different partitions and corrupt
-the offsets — exactly the nondeterministically-partitioned-intermediate
-case ``reliable_pin`` exists for.  Under a local master this is the same
-``localCheckpoint`` as before (cost-identical); on a cluster the pin goes
-to reliable warehouse scratch so a single executor loss mid-rank is a
-task retry, not a job kill.  The two-pass algorithm inherently reads the
-partitioned data twice, so this persist is the algorithm's working set,
-not overhead.
+Both consumers of the range-partitioned rows (the counts and the rank
+window) must see the SAME partitioning, or the offsets would not match
+the local row numbers.  ``repartitionByRange`` samples its bounds, so two
+executions of it can partition differently; the intermediate is therefore
+pinned once (see :func:`inplan_global_rank`).
 
 Callers must order by a UNIQUE compound (tie-break on an id) — ranks are
 then total and engine-independent.  Used by ``window_distribution``
-(ntile/percent_rank/cume_dist vs the oracle's window functions) and the
-RFM segmentation's three metric quintiles.
+(ntile/percent_rank/cume_dist vs the oracle's window functions), the RFM
+segmentation's three metric quintiles, and the decile, share and
+latency-percentile queries in ``plans/``.
 """
-
 from __future__ import annotations
 
 from typing import Sequence
@@ -40,41 +35,6 @@ from pyspark.sql import Column, DataFrame, Window
 from ..sources.sinks import reliable_pin
 
 
-def distributed_global_rank(
-    df: DataFrame,
-    cols: Sequence[str],
-    rank_col: str = "__rank",
-    *,
-    force_reliable: bool = False,
-) -> tuple[DataFrame, int]:
-    """(df + 1-based global ``rank_col`` over the unique ordering ``cols``,
-    total row count).  ``force_reliable`` exercises ``reliable_pin``'s
-    cluster branch under a local master (test hook)."""
-    spark = df.sparkSession
-    parts = spark.sparkContext.defaultParallelism
-    ranged = reliable_pin(
-        df.repartitionByRange(parts, *cols), force_reliable=force_reliable
-    ).withColumn("__pid", F.spark_partition_id())
-    wp = Window.partitionBy("__pid").orderBy(*cols)
-    local = ranged.withColumn("__rn", F.row_number().over(wp))
-    sizes = sorted(
-        (r["__pid"], r["cnt"])
-        for r in ranged.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()
-    )
-    n = sum(cnt for _, cnt in sizes)
-    offsets, acc = [], 0
-    for pid, cnt in sizes:
-        offsets.append((pid, acc))
-        acc += cnt
-    off = F.broadcast(spark.createDataFrame(offsets, "__pid int, __off long"))
-    out = (
-        local.join(off, "__pid")
-        .withColumn(rank_col, (F.col("__rn") + F.col("__off")).cast("long"))
-        .drop("__pid", "__rn", "__off")
-    )
-    return out, n
-
-
 def inplan_global_rank(
     df: DataFrame,
     cols: Sequence[str],
@@ -82,14 +42,8 @@ def inplan_global_rank(
     n_col: str | None = None,
 ) -> DataFrame:
     """df + 1-based global ``rank_col`` over the unique ordering ``cols``,
-    computed in ONE Spark action — the zero-extra-action successor of
-    :func:`distributed_global_rank` for callers that can consume the total
-    row count as a COLUMN (``n_col``) instead of a driver-side int.
-
-    Same two-level algorithm (range partition → per-partition
-    ``row_number`` → cross-partition offset fix-up), with both extra
-    driver actions removed (guide §5.2 — the driver should do no data
-    work; each removed action is a full job round-trip):
+    computed in ONE Spark action; with ``n_col`` set, the total row count
+    rides every row as a column instead of a driver-side int.
 
     - the range-partitioned intermediate is pinned with a LAZY
       ``localCheckpoint(eager=False)`` and read by the offsets subtree
@@ -97,14 +51,16 @@ def inplan_global_rank(
       reference the SAME checkpointed RDD, so it materializes once
       (during the action's own broadcast-build job), the sampling-based
       range partitioner runs exactly once, and both consumers see
-      identical partitioning — the consistency
-      ``distributed_global_rank`` buys with an eager ``reliable_pin``
-      action, obtained here lazily.  Unlike the r16 SQL ``persist()``
-      (which the CacheManager holds until an explicit unpersist — a
-      corpus-sized cache entry leaked per invocation in a long-lived
-      session, ADVICE r16), the RDD-level pin is released by the
-      context cleaner once the returned frame is garbage-collected.
-      On a cluster a lost executor after truncation fails the job (the
+      identical partitioning.  Exchange reuse cannot stand in for the
+      pin once the frame carries columns beyond the sort keys: the counts
+      read only the keys, so column pruning gives them a narrower range
+      exchange than the rank window's, Spark plans it separately, and its
+      bounds come from a second sample.  Unlike a SQL ``persist()``
+      (which the CacheManager holds until an explicit unpersist — one
+      corpus-sized cache entry per invocation in a long-lived session),
+      the RDD-level pin is released by the context cleaner once the
+      returned frame is garbage-collected.  On a cluster a lost executor
+      after truncation fails the job (the
       ``reliable_pin`` trade-off documented there); rank callers are
       single-action queries where a retry re-runs the whole plan.
     - per-partition counts fold into exclusive offsets (and the total)
@@ -115,8 +71,7 @@ def inplan_global_rank(
       counts would need a partitionless ``Window.orderBy``, i.e. exactly
       the single-reducer exchange this operator exists to avoid.
 
-    Callers must order by a UNIQUE compound (tie-break on an id), as with
-    ``distributed_global_rank``.
+    Callers must order by a UNIQUE compound (tie-break on an id).
     """
     spark = df.sparkSession
     parts = spark.sparkContext.defaultParallelism
@@ -251,9 +206,9 @@ def distributed_prefix_sum(
     force_reliable: bool = False,
 ) -> DataFrame:
     """df + EXCLUSIVE prefix sum of ``weight_col`` over the unique
-    ordering ``cols`` — the weighted sibling of
-    ``distributed_global_rank`` (same two-pass shape: range partition →
-    local running sums → broadcast per-partition offsets), replacing a
+    ordering ``cols`` — the weighted sibling of :func:`inplan_global_rank`
+    (range partition → local running sums → broadcast per-partition
+    offsets, here through an eager pin and a driver collect), replacing a
     partitionless cumulative window that would funnel every row through
     one reducer.  Callers must order by a UNIQUE compound; ``weight_col``
     must be integral (offsets stay exact BIGINTs)."""

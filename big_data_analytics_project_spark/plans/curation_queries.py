@@ -1847,9 +1847,9 @@ def layout_bucketed_join(spark, sf_dir):
 # --- curriculum phase assignment by quality tertile -----------------------
 # Curriculum training consumes the corpus easiest-last: phase 2 holds the
 # top quality tertile, phase 0 the bottom.  Exact tertiles over 100 TB
-# need a global rank with no single reducer — the same two-pass
-# distributed rank RFM uses (range partition → local row_number →
-# broadcast offsets).  Per-doc quality rounds to 6 dp BEFORE ranking
+# need a global rank with no single reducer — the same in-plan global
+# rank RFM uses (range partition → local row_number → broadcast
+# offsets).  Per-doc quality rounds to 6 dp BEFORE ranking
 # (determinism.md ordering rule, doc_id tie-break); the per-phase mean
 # quality sums micro-quantized BIGINTs, never raw doubles.
 

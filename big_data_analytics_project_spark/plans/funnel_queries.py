@@ -657,9 +657,9 @@ def rfm_customer_segments(spark, sf_dir):
 
     Each quintile is a GLOBAL ntile over a unique (metric, user_id)
     ordering — the single-reducer trap — computed instead with the
-    two-pass ``operators/rank.distributed_global_rank`` (range-partition
+    in-plan ``operators/rank.inplan_global_rank`` (range-partition
     + local row_number + offset fix-up) and the bit-exact
-    ``ntile_from_rank`` base/remainder rule, three passes over the
+    ``ntile_from_rank_n`` base/remainder rule, three passes over the
     user-cardinality rollup (never the event log).  Monetary sums as
     BIGINT cents on the portable floor grid; recency counts exact days
     against a 1-row broadcast anchor."""
@@ -841,8 +841,8 @@ def funnel_conversion_latency(spark, sf_dir):
 
     Latencies are exact integer seconds (``date_diff('second')`` ↔
     ``unix_timestamp`` subtraction, the determinism.md timestamp rule);
-    the global percentile ranks come from the two-pass
-    ``operators/rank.distributed_global_rank`` over the CONVERTED-user
+    the global percentile ranks come from the in-plan
+    ``operators/rank.inplan_global_rank`` over the CONVERTED-user
     rollup (conversion-cardinality, not event-cardinality), with
     (latency, user_id) uniqueness making every pick engine-independent.
     One user-keyed funnel join + one rank pass; output is a single row."""
@@ -918,8 +918,8 @@ def inequality_gini_revenue(spark, sf_dir):
 
     The discrete-population identity G = (2·Σi·yᵢ − (n+1)·Σy)/(n·Σy)
     over ascending-ranked revenues needs exactly one global rank — the
-    two-pass ``operators/rank.distributed_global_rank`` over the
-    purchaser rollup (fourth consumer of that operator).  Revenue is
+    in-plan ``operators/rank.inplan_global_rank`` over the purchaser
+    rollup.  Revenue is
     BIGINT cents on the portable floor grid, every moment is an exact
     integer sum, and the single division casts two identical exact
     BIGINTs to double on both engines (IEEE casts agree even past 2^53);
@@ -1661,9 +1661,9 @@ def retention_growth_accounting(spark, sf_dir):
 # --- revenue concentration: top-percentile user share ---------------------
 # "What share of revenue comes from the top 1% / 10% of spenders?" — the
 # whale-concentration readout next to the Gini coefficient.  Exact
-# percentile CUTS need a global rank; this uses the same two-pass
-# distributed rank as RFM (range partition → local row_number →
-# broadcast offsets — no single reducer), descending by exact cents with
+# percentile CUTS need a global rank; this uses the same in-plan global
+# rank as RFM (range partition → local row_number → broadcast offsets —
+# no single reducer), descending by exact cents with
 # the user id as tie-break.  Cut sizes are ⌈n/100⌉ and ⌈n/10⌉ computed
 # identically on both engines; shares are single divisions over exact
 # BIGINT sums.
@@ -1703,8 +1703,7 @@ FROM ranked
 )
 def inequality_top_user_share(spark, sf_dir):
     """Share of purchase revenue captured by the top 1% / 10% of
-    spenders, via the two-pass distributed global rank — see block
-    comment."""
+    spenders, via the in-plan global rank — see block comment."""
     from ..operators.rank import inplan_global_rank
 
     ev = read_table(spark, sf_dir, "events")
@@ -1751,7 +1750,7 @@ def inequality_top_user_share(spark, sf_dir):
 # cadence next to conversion latency (which measures only first
 # view→first purchase).  Gaps are exact integer seconds from a per-user
 # lag window; the global p50/p90/p99 are exact order statistics via the
-# two-pass distributed rank over the GAP table (purchase-cardinality),
+# in-plan global rank over the GAP table (purchase-cardinality),
 # tie-broken to full uniqueness by (gap, user, event).
 
 _REPEAT_SQL = """
@@ -1843,7 +1842,7 @@ def repeat_purchase_intervals(spark, sf_dir):
 # corpus's first half vs its second, and how many users moved between
 # cells?  The upgrade/downgrade matrix behind "are my whales new or
 # durable?".  Each half gets its own exact quartile via the RFM
-# machinery (two-pass distributed rank + the engine-exact ntile rule,
+# machinery (in-plan global rank + the engine-exact ntile rule,
 # (cents, user_id) tie-break); non-buyers in a half sit in quartile 0;
 # a full-outer join on user_id builds the matrix.  The midpoint is
 # integer epoch arithmetic.

@@ -808,16 +808,16 @@ def window_range_frame(spark, sf_dir):
 )
 def window_distribution(spark, sf_dir):
     """ntile / percent_rank / cume_dist over a unique total ordering,
-    computed with the two-pass distributed global rank instead of a
-    single-reducer Window.orderBy:
+    computed with the in-plan global rank instead of a single-reducer
+    Window.orderBy:
 
     1. repartitionByRange on the sort key (sampling-based range
        partitioner — the same mechanism as a distributed orderBy), then
        row_number WITHIN each range partition (parallel per-partition
        sorts, no data movement to one reducer);
-    2. per-partition counts → cumulative offsets (a partition-count-sized
-       driver array, broadcast back) turn local row numbers into global
-       ranks.
+    2. per-partition counts → exclusive offsets (a bounded broadcast join
+       over the per-partition count rows) turn local row numbers into
+       global ranks, with the total count as a column.
 
     With the unique (c_acctbal, c_custkey) ordering there are no ties, so
     percent_rank = (rank-1)/(n-1), cume_dist = rank/n, and ntile follows
@@ -1282,9 +1282,9 @@ def profile_decile_order_totals(spark, sf_dir):
     summary (boundaries, counts, masses per 10%-bucket) that drives
     skew-aware partitioning choices and pricing dashboards.
 
-    Deciles come from the two-pass ``operators/rank.distributed_global_rank``
-    + bit-exact ``ntile_from_rank`` (fifth consumer — never a
-    single-reducer ntile); amounts are BIGINT cents on the portable floor
+    Deciles come from the in-plan ``operators/rank.inplan_global_rank``
+    + bit-exact ``ntile_from_rank_n`` (never a single-reducer ntile);
+    amounts are BIGINT cents on the portable floor
     grid so bucket boundaries, sums, and the one average division are
     exact."""
     from ..operators.rank import inplan_global_rank, ntile_from_rank_n

@@ -3,9 +3,9 @@
 Every operator in SURVEY §2 (plus the large-scale extension operators) is
 registered here as a named ``QuerySpec``: a Spark callable
 ``(spark, sf_dir) -> DataFrame`` and, when SQL-expressible, the equivalent
-DuckDB oracle SQL.  ``__spark_entry__.py`` exposes the registry to the
-driver, which cross-checks row-count + schema + order-insensitive
-value-hash at sf0.01.
+DuckDB oracle SQL.  ``verify.py`` runs both and compares row count,
+column names and order-insensitive values; ``tests/test_oracle_parity.py``
+does the same for every oracle-backed query at sf0.001.
 
 Determinism rules for oracle-checked queries (see ``docs/determinism.md``):
  - alias every computed column identically in Spark and SQL;
@@ -31,7 +31,7 @@ SparkQuery = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     fn: SparkQuery
-    sql: str | None = None  # DuckDB oracle; None → driver does rows-only check
+    sql: str | None = None  # DuckDB oracle; None → rows-only check
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
 
@@ -44,7 +44,7 @@ def query(name: str, sql: str | None = None, tags: tuple[str, ...] = ()):
 
     def deco(fn: SparkQuery) -> SparkQuery:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # The driver owns the session; pin runtime confs that affect
+            # The caller owns the session; pin runtime confs that affect
             # cross-engine determinism (UTC timestamps).
             from .session import tune_for_oracle
 
@@ -62,84 +62,6 @@ def query(name: str, sql: str | None = None, tags: tuple[str, ...] = ()):
 
 
 _LOADED = False
-
-# The verification driver cross-checks only the FIRST 50 registered queries
-# per round, in iteration order.  Rounds 1-2 used raw module-import order,
-# which left oracle-backed queries past position 50 without a driver row,
-# and rounds 3-4 used hand-edited tier lists, which drifted (round 4's new
-# queries landed at positions 51-52, outside the window, and a
-# registration-order shift silently evicted a verified query).  Round 5 ran
-# the first digest-derived rotation: 49/50 driver rows green (every r02-
-# stale query re-verified; the one red was a canonicalizer-incompatible
-# array output, reshaped in round 6).  Round 6 grew the surface by 45
-# tier-0 queries (the 21-query TPC-H suite, the graph family, the
-# curation/quality/mixing operators, and the late-round Spark-4 batch:
-# variant, multi-probe LSH, path mining, EWMA fold, left-outer
-# stream-stream join), which — plus the 4-query rows-only lift below —
-# fill this round's window completely and rotate every green out to the
-# parity suite for one round.  Twelve final round-6 additions (OOV audit,
-# length-bucketed batching, Markov transitions, PSI drift, observe()
-# metrics, EXCEPT/INTERSECT ALL, seasonal-naive forecast, A/B readout,
-# token-budget subsetting, theta/KLL sketch contracts) enter the overfull
-# tier-0 pool by registration order, displacing later-registered tier-0
-# queries into an overflow queue just past the window — still tier 0,
-# landing at the round-7 head (tests/test_registry_order.py pins the
-# overflow ordering).  The closing round-6 pair (SemDeDup semantic
-# dedup, IVF NDCG@10 audit) joins the same overflow pool; EXPECTED_WINDOW
-# was re-pinned at each addition, as it was for every one of the 16-query
-# closing batch (BM25, compaction, snapshot diff, MAD, attribution, OLS,
-# RFM, chi-square, latency percentiles, Gini, Holt, Mann-Whitney,
-# Kruskal-Wallis, session metrics, JS drift, deciles, PMI, temperature
-# resampling, matryoshka) — each verified in all three modes before its
-# commit, with full 190/190 dual-mode sweeps recorded at round close.
-#
-# The window is therefore now DERIVED from the recorded driver history
-# (``driver_history.json`` — a checked-in digest of CORRECTNESS_r*.json
-# mapping each query to the last round it was hash-green):
-#
-#   tier 0 — oracle-backed queries with NO driver-green row yet (new or
-#            never-windowed): checked first, always;
-#   tier 1 — oracle-backed, stalest-green first (last-green round
-#            ascending), so every oracle query cycles back through the
-#            window and no query goes more than a couple of rounds without
-#            a driver-grade sf0.01 re-check;
-#   tier 2 — rows-only (sql=None) queries: a driver rows-only row proves
-#            little beyond "it runs", which pytest already covers.
-#
-# Adding a query can no longer evict a verified one silently: new queries
-# are tier 0 by construction, the displaced ones are the FRESHEST greens,
-# and ``tests/test_registry_order.py`` pins the exact expected window so
-# any composition change fails a test until acknowledged.  The digest is
-# refreshed each round via ``scripts/update_driver_history.py``; the local
-# DuckDB-parity suite (``tests/test_oracle_parity.py``) still checks every
-# query at sf0.001 regardless of window membership.
-DRIVER_WINDOW_SIZE = 50
-
-
-def _load_history() -> dict[str, int]:
-    import json
-    from pathlib import Path
-
-    path = Path(__file__).with_name("driver_history.json")
-    return json.loads(path.read_text()) if path.exists() else {}
-
-
-# One-round tier override (VERDICT r5 item 4, served in round 6): the four
-# rows-only streaming queries got their CORRECTNESS_r06 rows recorded, so the
-# lift is dropped.  Re-populate only if a future rows-only query needs a
-# one-round driver appearance on record.
-ROWS_ONLY_WINDOW_LIFT: tuple[str, ...] = ()
-
-# Within tier 0, these names jump to the head of the window (in tuple
-# order) ahead of registration-index order.  Round-8 use (VERDICT r7
-# items 1/5/7) put tpch_q12, the ALS quality contract, and the three
-# streaming rows-only→oracle lifts here; all five landed green in
-# CORRECTNESS_r08, so the override is dropped (ADVICE r8: a tripwire in
-# tests/test_registry_order.py now fails if every listed name already has
-# a digest row, mirroring test_rows_only_lift_dropped_once_recorded).
-# Re-populate only when a specific tier-0 query must beat registration
-# order into the next window.
-TIER0_PRIORITY: tuple[str, ...] = ()
 
 # Terminal rows-only status (VERDICT r8 item 5): every sql=None query must
 # either be lifted to an oracle (contract pattern — ml_als_quality_contract
@@ -210,51 +132,11 @@ ROWS_ONLY_FINAL: dict[str, str] = {
     ),
 }
 
-# Round-9 rotation plan (VERDICT r7 item 4): after the round-8 window
-# lands, the tier-0 remainder is the ~20-25 late-registered TPC-H/new
-# queries displaced here — they fill the round-9 head by construction.
-# The round-9 tail should then re-check the OLDEST greens: the r3/r4
-# vintage block (flagship_sessionization last green r5; the r5 block
-# two rounds stale by then).  That is exactly what tier 1
-# (stalest-green-first) derives automatically, so round 9 needs no
-# manual override: run the ritual, repin, and the window is
-# tier-0-remainder + oldest-green tail.
-
-
-def _driver_order(reg: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
-    last_green = _load_history()
-
-    def key(item: tuple[int, str]) -> tuple[int, int, int]:
-        idx, name = item
-        spec = reg[name]
-        if spec.sql is None:
-            return (2, 0, idx)
-        if name not in last_green:
-            if name in TIER0_PRIORITY:
-                return (0, 0, TIER0_PRIORITY.index(name) - len(TIER0_PRIORITY))
-            return (0, 0, idx)
-        return (1, last_green[name], idx)
-
-    ordered = [name for _, name in sorted(enumerate(reg), key=key)]
-    lifted = [n for n in ROWS_ONLY_WINDOW_LIFT if n in reg]
-    if lifted:
-        ordered = [n for n in ordered if n not in lifted]
-        cut = max(0, DRIVER_WINDOW_SIZE - len(lifted))
-        ordered[cut:cut] = lifted
-    return {name: reg[name] for name in ordered}
-
-
-def driver_window(reg: dict[str, QuerySpec] | None = None) -> list[str]:
-    """The names the driver will actually cross-check this round (the
-    first ``DRIVER_WINDOW_SIZE`` in iteration order)."""
-    reg = reg if reg is not None else load_all()
-    return list(reg)[:DRIVER_WINDOW_SIZE]
-
 
 def load_all() -> dict[str, QuerySpec]:
     """Import every module that registers queries, once, and return the
-    registry in driver-priority order (see ``_driver_order``)."""
-    global _LOADED, REGISTRY
+    registry in registration order."""
+    global _LOADED
     if not _LOADED:
         from .plans import (  # noqa: F401
             curation_queries,
@@ -276,8 +158,5 @@ def load_all() -> dict[str, QuerySpec]:
             tpch_queries,
         )
 
-        reordered = _driver_order(REGISTRY)
-        REGISTRY.clear()
-        REGISTRY.update(reordered)
         _LOADED = True
     return REGISTRY

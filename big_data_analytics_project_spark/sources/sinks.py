@@ -146,10 +146,11 @@ def reliable_pin(df: DataFrame, *, force_reliable: bool = False) -> DataFrame:
 
     Iterative operators (connected components, BFS, label propagation)
     cut lineage every round so the plan stays one round deep; the
-    two-pass global rank and the read-then-overwrite delete pin
-    nondeterministically-partitioned intermediates whose recompute would
-    be unsound.  In both shapes the truncation is LOAD-BEARING: once the
-    lineage is cut, a lost block cannot be recomputed.
+    two-pass prefix sum (``operators/rank.distributed_prefix_sum``) and
+    the read-then-overwrite delete pin nondeterministically-partitioned
+    intermediates whose recompute would be unsound.  In both shapes the
+    truncation is LOAD-BEARING: once the lineage is cut, a lost block
+    cannot be recomputed.
 
     - local master (``local[*]``): ``localCheckpoint(eager)`` — blocks
       live in the single shared JVM, no executor to lose independently

@@ -31,7 +31,7 @@ def main() -> None:
         "",
         f"{total} registered queries; {oracle} oracle-checked against DuckDB,",
         f"{total - oracle} rows-only (seeded/approximate/stateful; pytest-pinned).",
-        "Driver-window order = registry iteration order (see registry.py).",
+        "Rows are in registration order (see registry.load_all).",
         "",
         "| # | query | check | tags | what |",
         "|---|---|---|---|---|",

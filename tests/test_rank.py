@@ -1,4 +1,4 @@
-"""distributed_global_rank / ntile_from_rank vs the single-reducer window
+"""inplan_global_rank / ntile_from_rank vs the single-reducer window
 functions they replace — equivalence at awkward sizes (n < k, n % k != 0)."""
 
 import pyspark.sql.functions as F
@@ -7,7 +7,6 @@ from pyspark.sql import Window
 
 from big_data_analytics_project_spark.operators.rank import (
     bucketed_prefix_sum,
-    distributed_global_rank,
     inplan_global_rank,
     ntile_from_rank,
     ntile_from_rank_n,
@@ -20,14 +19,12 @@ def test_ntile_matches_window_function(spark, n, k):
     df = spark.createDataFrame(
         [(i, (i * 37) % 11) for i in range(n)], "id long, v long"
     )
-    ranked, total = distributed_global_rank(df, ["v", "id"])
-    assert total == n
-    got = {
-        r["id"]: r["q"]
-        for r in ranked.select(
-            "id", ntile_from_rank(F.col("__rank"), n, k).alias("q")
-        ).collect()
-    }
+    ranked = inplan_global_rank(df, ["v", "id"], n_col="__n")
+    rows = ranked.select(
+        "id", "__n", ntile_from_rank(F.col("__rank"), n, k).alias("q")
+    ).collect()
+    assert {r["__n"] for r in rows} == {n}
+    got = {r["id"]: r["q"] for r in rows}
     w = Window.orderBy("v", "id")
     want = {
         r["id"]: r["q"]
@@ -67,17 +64,19 @@ def test_bucketed_prefix_sum_matches_global_window(spark, div):
 
 def test_rank_is_total_and_unique(spark):
     df = spark.createDataFrame([(i, i % 3) for i in range(50)], "id long, v long")
-    ranked, n = distributed_global_rank(df, ["v", "id"])
-    ranks = [r["__rank"] for r in ranked.collect()]
-    assert sorted(ranks) == list(range(1, n + 1))
+    rows = inplan_global_rank(df, ["v", "id"], n_col="__n").collect()
+    (n,) = {r["__n"] for r in rows}
+    assert n == 50
+    assert sorted(r["__rank"] for r in rows) == list(range(1, n + 1))
 
 
 @pytest.mark.parametrize("n", [0, 1, 3, 8, 997])
 def test_inplan_rank_matches_two_pass_operator(spark, n):
     """inplan_global_rank (single action, in-plan offsets + count column)
-    must produce the identical rank column as distributed_global_rank,
-    with the count riding every row — including heavy ties spanning range
-    partitions, a one-row frame, and the empty frame."""
+    must produce the identical rank column as ``row_number()`` over the
+    single-reducer global window it replaces, with the total ``count()``
+    riding every row — including heavy ties spanning range partitions, a
+    one-row frame, and the empty frame."""
     df = spark.createDataFrame(
         [((i * 37) % 5, i) for i in range(n)], "v long, id long"
     ).repartition(7)
@@ -85,11 +84,13 @@ def test_inplan_rank_matches_two_pass_operator(spark, n):
         r["id"]: (r["r"], r["__n"])
         for r in inplan_global_rank(df, ["v", "id"], "r", n_col="__n").collect()
     }
-    if n == 0:
-        assert got == {}
-        return
-    ranked, total = distributed_global_rank(df, ["v", "id"], "r")
-    want = {r["id"]: (r["r"], total) for r in ranked.collect()}
+    total = df.count()
+    w = Window.orderBy("v", "id")
+    want = {
+        r["id"]: (r["r"], total)
+        for r in df.select("id", F.row_number().over(w).alias("r")).collect()
+    }
+    assert len(want) == n
     assert got == want
 
 

@@ -41,3 +41,10 @@ def test_rows_only_queries_all_have_finality_verdicts():
         f"stale verdicts: {sorted(set(ROWS_ONLY_FINAL) - rows_only)}"
     )
     assert all(ROWS_ONLY_FINAL.values()), "empty justification"
+
+
+def test_every_query_has_fn_and_consistent_spec():
+    reg = load_all()
+    for name, spec in reg.items():
+        assert spec.name == name
+        assert callable(spec.fn)

@@ -543,35 +543,11 @@ def test_cluster_cc_converges_on_long_path(spark):
     assert got == {(i, 1) for i in range(1, 10)}
 
 
-def test_global_rank_identical_under_reliable_checkpoint(spark):
-    """distributed_global_rank pins a nondeterministically-partitioned
-    intermediate (repartitionByRange samples its boundaries) — the exact
-    second use-case in reliable_pin's docstring.  Both branches must
-    produce the same total ordering (VERDICT r15 item 3)."""
-    from big_data_analytics_project_spark.operators.rank import (
-        distributed_global_rank,
-    )
-
-    df = spark.createDataFrame(
-        [(v, i) for i, v in enumerate([5, 3, 9, 1, 7, 3, 8, 0, 6, 2])],
-        "v long, id long",
-    )
-    local, n_local = distributed_global_rank(df, ["v", "id"], "r")
-    local_rows = {(r["v"], r["id"], r["r"]) for r in local.collect()}
-    forced, n_forced = distributed_global_rank(
-        df, ["v", "id"], "r", force_reliable=True
-    )
-    forced_rows = {(r["v"], r["id"], r["r"]) for r in forced.collect()}
-    assert n_local == n_forced == 10
-    assert forced_rows == local_rows
-    # ranks are a permutation of 1..n and follow the (v, id) order
-    ordered = sorted(local_rows, key=lambda t: (t[0], t[1]))
-    assert [t[2] for t in ordered] == list(range(1, 11))
-
-
 def test_prefix_sum_identical_under_reliable_checkpoint(spark):
-    """Same branch-equality contract for distributed_prefix_sum — its
-    range-partitioned intermediate is pinned by the same reliable_pin."""
+    """distributed_prefix_sum pins a nondeterministically-partitioned
+    intermediate (repartitionByRange samples its boundaries) — the second
+    use-case in reliable_pin's docstring.  Both branches must produce the
+    same prefix sums."""
     from big_data_analytics_project_spark.operators.rank import (
         distributed_prefix_sum,
     )
