@@ -22,19 +22,11 @@ import pyspark.sql.functions as F
 from ..registry import query
 from ..streaming import processor as P
 
-# The staged JSON replay of the events table is deterministic for a given
-# (sf_dir, n_files), so it is staged ONCE per process and reused by every
-# streaming query — the bench then measures the streaming engine, not
+# A staged JSON replay is deterministic for a given (sf_dir, table,
+# n_files), so it is staged ONCE per process and reused by every streaming
+# query — the bench then measures the streaming engine, not
 # repartitionByRange + JSON write on every call.  Cleaned up at exit.
-_STAGE_CACHE: dict[tuple[str, int], str] = {}
-
-# State-store partition count for the bounded fixture replays: per-trigger
-# volume here is ≤~100k rows, where 32 state partitions are pure lifecycle
-# overhead (see processor._state_partitions — measured 8.2 s → 2.9 s on the
-# stream-stream outer join at sf0.1).  Production deployments size this to
-# rows-per-trigger ÷ target-partition-rows via the same knob; results are
-# partition-count-independent either way.
-_STATE_PARTS = 8
+_STAGE_CACHE: dict[tuple[str, str, int], str] = {}
 
 
 # Sliding-window geometry shared by the Spark call AND the oracle SQL —
@@ -62,33 +54,11 @@ GROUP BY 1, 2
 """
 
 
-def _staged(spark, sf_dir, n_files=4):
-    key = (os.path.abspath(sf_dir), n_files)
+def _staged(spark, sf_dir, table="events", n_files=4):
+    key = (os.path.abspath(sf_dir), table, n_files)
     d = _STAGE_CACHE.get(key)
     if d is None or not os.path.isdir(d):
-        d = P.stage_events_as_json_stream(spark, sf_dir, n_files=n_files)
-        _STAGE_CACHE[key] = d
-    return d
-
-
-def _staged_docs(spark, sf_dir, n_files=4):
-    """Per-process cache of the staged DOCUMENT stream (same policy as
-    ``_staged``; keyed separately so the two fixtures never collide)."""
-    key = (os.path.abspath(sf_dir) + "#docs", n_files)
-    d = _STAGE_CACHE.get(key)
-    if d is None or not os.path.isdir(d):
-        d = P.stage_docs_as_json_stream(spark, sf_dir, n_files=n_files)
-        _STAGE_CACHE[key] = d
-    return d
-
-
-def _staged_embeddings(spark, sf_dir, n_files=4):
-    """Per-process cache of the staged EMBEDDING stream (same policy as
-    ``_staged``; keyed separately so the three fixtures never collide)."""
-    key = (os.path.abspath(sf_dir) + "#emb", n_files)
-    d = _STAGE_CACHE.get(key)
-    if d is None or not os.path.isdir(d):
-        d = P.stage_embeddings_as_json_stream(spark, sf_dir, n_files=n_files)
+        d = P.stage_json_stream(spark, sf_dir, table, n_files=n_files)
         _STAGE_CACHE[key] = d
     return d
 
@@ -142,7 +112,7 @@ def streaming_tumbling_window(spark, sf_dir):
     json_dir = _staged(spark, sf_dir)
     stream = P.read_event_stream(spark, json_dir, max_files_per_trigger=2)
     agg = P.tumbling_features(stream)
-    out = P.run_to_completion(agg, "t_tumbling", output_mode="complete", state_partitions=_STATE_PARTS)
+    out = P.run_to_completion(agg, "t_tumbling", output_mode="complete")
     return out.select(
         F.unix_timestamp(F.col("win.start")).cast("long").alias("window_start_epoch"),
         "user_id",
@@ -162,7 +132,7 @@ def streaming_session_window(spark, sf_dir):
     json_dir = _staged(spark, sf_dir)
     stream = P.read_event_stream(spark, json_dir, max_files_per_trigger=2)
     agg = P.session_features(stream, gap="30 minutes")
-    out = P.run_to_completion(agg, "t_session", output_mode="complete", state_partitions=_STATE_PARTS)
+    out = P.run_to_completion(agg, "t_session", output_mode="complete")
     return out.select(
         "user_id",
         F.unix_timestamp(F.col("win.start")).cast("long").alias("session_start_epoch"),
@@ -186,7 +156,7 @@ def streaming_sliding_window(spark, sf_dir):
         window=f"{SLIDING_WINDOW_SEC} seconds",
         slide=f"{SLIDING_SLIDE_SEC} seconds",
     )
-    out = P.run_to_completion(agg, "t_sliding", output_mode="complete", state_partitions=_STATE_PARTS)
+    out = P.run_to_completion(agg, "t_sliding", output_mode="complete")
     return out.select(
         F.unix_timestamp(F.col("win.start")).cast("long").alias("window_start_epoch"),
         "user_id",
@@ -247,7 +217,7 @@ def streaming_static_enrich(spark, sf_dir):
             .alias("total_value"),
         )
     )
-    out = P.run_to_completion(agg, "t_enrich", output_mode="complete", state_partitions=_STATE_PARTS)
+    out = P.run_to_completion(agg, "t_enrich", output_mode="complete")
     return out.select(
         F.unix_timestamp(F.col("win.start")).cast("long").alias("window_start_epoch"),
         "segment",
@@ -308,7 +278,6 @@ def streaming_interval_join(spark, sf_dir):
         ),
         "t_ssjoin",
         output_mode="append",
-        state_partitions=_STATE_PARTS,
     )
     return out
 
@@ -362,7 +331,7 @@ def streaming_tumbling_append(spark, sf_dir):
     try:
         stream = P.read_event_stream(spark, json_dir, max_files_per_trigger=2)
         agg = P.tumbling_features(stream)
-        out = P.run_append_to_files(agg, out_dir, state_partitions=_STATE_PARTS)
+        out = P.run_append_to_files(agg, out_dir)
         result = out.select(
             F.unix_timestamp(F.col("win.start")).cast("long").alias("window_start_epoch"),
             "user_id",
@@ -434,7 +403,6 @@ def streaming_dedup(spark, sf_dir):
         P.dedup_stream(stream, watermark="45 days"),
         "t_dedup",
         "append",
-        state_partitions=_STATE_PARTS,
     )
     return out.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n_unique_payload_events")
@@ -502,7 +470,6 @@ def streaming_custom_sessionization(spark, sf_dir):
         sessionize_with_state(stream, gap_sec=1800, value_quantum=100),
         "t_custom_sess",
         "append",
-        state_partitions=_STATE_PARTS,
     )
     return out.select(
         "user_id", "session_start_epoch", "session_end_epoch",
@@ -525,7 +492,7 @@ def streaming_online_scoring(spark, sf_dir):
     stream = P.read_event_stream(spark, json_dir, max_files_per_trigger=1)
     agg = P.tumbling_features(stream)
     bridge = OnlineScoringBridge()
-    batches = run_scored_stream(agg, bridge, state_partitions=_STATE_PARTS)
+    batches = run_scored_stream(agg, bridge)
     if not batches:
         batches = [{"batch_id": -1, "n_rows": 0, "total_events": 0,
                     "total_views": 0, "conversion_rate": 0.0,
@@ -601,9 +568,7 @@ def streaming_frozen_scoring(spark, sf_dir):
     )
     sink_dir = index_scratch_dir(spark, "frozen_scores")
     bridge = FrozenScoringBridge(sink_dir=sink_dir)
-    run_foreach_batch(
-        agg, bridge, output_mode="append", state_partitions=_STATE_PARTS
-    )
+    run_foreach_batch(agg, bridge, output_mode="append")
 
     schema = (
         "window_start_epoch long, user_id long, label long, view_count long,"
@@ -675,7 +640,7 @@ def streaming_band_index_ingest(spark, sf_dir):
     from ..streaming.bridge import run_foreach_batch
     from .dedup_queries import _bandidx_banded, _bandidx_signed
 
-    json_dir = _staged_docs(spark, sf_dir)
+    json_dir = _staged(spark, sf_dir, "documents")
     idx_base = index_scratch_dir(spark, "band_index_stream")
 
     def ingest(batch_df, batch_id: int) -> None:
@@ -687,7 +652,7 @@ def streaming_band_index_ingest(spark, sf_dir):
             .parquet(f"{idx_base}/ingest_batch={batch_id}")
         )
 
-    stream = P.read_doc_stream(spark, json_dir, max_files_per_trigger=1)
+    stream = P.read_json_stream(spark, json_dir, "doc_id LONG, text STRING")
     run_foreach_batch(stream, ingest, output_mode="append")
 
     idx = spark.read.parquet(idx_base)
@@ -755,7 +720,7 @@ def streaming_ivf_posting_index_ingest(spark, sf_dir):
     from ..streaming.bridge import run_foreach_batch
     from .ivf_centroids import IVF_CENTROIDS
 
-    json_dir = _staged_embeddings(spark, sf_dir)
+    json_dir = _staged(spark, sf_dir, "embeddings")
     idx_base = index_scratch_dir(spark, "posting_index_stream")
 
     def ingest(batch_df, batch_id: int) -> None:
@@ -780,7 +745,9 @@ def streaming_ivf_posting_index_ingest(spark, sf_dir):
             .parquet(f"{idx_base}/ingest_batch={batch_id}")
         )
 
-    stream = P.read_embedding_stream(spark, json_dir, max_files_per_trigger=1)
+    stream = P.read_json_stream(
+        spark, json_dir, "vec_id LONG, embedding ARRAY<DOUBLE>"
+    )
     run_foreach_batch(stream, ingest, output_mode="append")
 
     posting = spark.read.parquet(idx_base)
@@ -933,7 +900,6 @@ def streaming_interval_join_left(spark, sf_dir):
         ),
         "t_ssjoin_left",
         output_mode="append",
-        state_partitions=_STATE_PARTS,
     )
     return out.where(
         F.col("__p_ts") <= F.lit(_SS_FINAL_CUTOFF).cast("timestamp")
@@ -962,7 +928,7 @@ def pyds_clickstream_stream_agg(spark, sf_dir):
         F.count("*").alias("n_events"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("total_cents"),
     )
-    out = P.run_to_completion(agg, "t_pyds_stream", output_mode="complete", state_partitions=_STATE_PARTS)
+    out = P.run_to_completion(agg, "t_pyds_stream", output_mode="complete")
     return out.orderBy("event_type")
 
 
@@ -1020,7 +986,7 @@ def streaming_scd2_dimension(spark, sf_dir):
     snap_dir = index_scratch_dir(spark, "scd2_snapshots")
     final = run_scd2_stream(
         stream, snap_dir, key="user_id", attr="event_type",
-        ts_col="ts", order_col="event_id", state_partitions=_STATE_PARTS,
+        ts_col="ts", order_col="event_id"
     )
     return final.select(
         "user_id",
@@ -1076,11 +1042,7 @@ def streaming_fanout_dual_sink(spark, sf_dir):
     def agg_writer(batch_df, batch_id):
         agg_counts.append((batch_id, batch_df.count()))
 
-    run_fanout_stream(
-        stream,
-        [idempotent_parquet_writer(raw_dir), agg_writer],
-        state_partitions=_STATE_PARTS,
-    )
+    run_fanout_stream(stream, [idempotent_parquet_writer(raw_dir), agg_writer])
     archived = spark.read.parquet(raw_dir)
     return archived.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
@@ -1130,9 +1092,7 @@ def streaming_windowed_topk(spark, sf_dir):
         .cast("double")
         .alias("total_value"),
     )
-    out = P.run_to_completion(
-        agg, "t_topk", output_mode="complete", state_partitions=_STATE_PARTS
-    )
+    out = P.run_to_completion(agg, "t_topk", output_mode="complete")
     counts = out.select(
         F.unix_timestamp(F.col("win.start")).cast("long").alias(
             "window_start_epoch"

@@ -63,9 +63,12 @@ class OnlineScoringBridge:
         self.batches: list[dict] = []
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():  # T7 empty-batch guard
+        # one collect per micro-batch: each Spark job re-runs the stateful
+        # aggregate, so the T7 empty-batch guard checks the collected frame
+        pdf = batch_df.toPandas()
+        if pdf.empty:
             return
-        pdf = batch_df.toPandas().fillna(0)
+        pdf = pdf.fillna(0)
         x = pdf[FEATURE_COLUMNS].to_numpy(dtype=np.float64)
         y = pdf["label"].to_numpy(dtype=np.int64)
         proba = self.model.observe(x, y)
@@ -175,15 +178,18 @@ class FrozenScoringBridge:
         self.n_batches_written = 0
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():  # T7 empty-batch guard
-            return
         if self.sink_dir is None:
-            pdf = batch_df.toPandas().fillna(0)
+            pdf = batch_df.toPandas()  # one collect; T7 guard on its result
+            if pdf.empty:
+                return
+            pdf = pdf.fillna(0)
             x = pdf[FEATURE_COLUMNS].to_numpy(dtype=np.float64)
             pdf["proba"] = self.model.predict_proba(x)
             self.frames.append(pdf)
             return
 
+        if batch_df.isEmpty():  # T7: write no empty partition directory
+            return
         (
             batch_df.na.fill(0)
             .withColumn("proba", frozen_scoring_column(self.model))
@@ -193,36 +199,20 @@ class FrozenScoringBridge:
         self.n_batches_written += 1
 
 
-def run_foreach_batch(
-    df: DataFrame,
-    fn,
-    output_mode: str = "update",
-    state_partitions: int | None = None,
-) -> None:
+def run_foreach_batch(df: DataFrame, fn, output_mode: str = "update") -> None:
     """Drain all available input of a streaming frame through a
-    foreachBatch callable (availableNow trigger, throwaway checkpoint).
-
-    ``state_partitions`` pins the stateful-operator partition count for
-    the drain (see ``processor._state_partitions``): STATEFUL upstreams
-    (watermarked aggregates) otherwise inherit the batch-side
-    ``spark.sql.shuffle.partitions`` as their state-store count for the
-    query's lifetime — sized for batch shuffles, not per-trigger state
-    volume.  Map-only upstreams (the index-ingest drains) have no state
-    store and pass ``None``."""
+    foreachBatch callable (``processor.drain_available``: availableNow
+    trigger, throwaway checkpoint, the drain's state-partition count)."""
     from .processor import drain_available
 
     writer = df.writeStream.outputMode(output_mode).foreachBatch(fn)
-    drain_available(df.sparkSession, writer, state_partitions)
+    drain_available(df.sparkSession, writer)
 
 
-def run_scored_stream(
-    agg: DataFrame,
-    bridge: OnlineScoringBridge,
-    state_partitions: int | None = None,
-) -> list[dict]:
+def run_scored_stream(agg: DataFrame, bridge: OnlineScoringBridge) -> list[dict]:
     """Attach the bridge to a streaming aggregate and drain all available
     input (update mode: only changed windows reach the bridge per batch)."""
-    run_foreach_batch(agg, bridge, "update", state_partitions=state_partitions)
+    run_foreach_batch(agg, bridge, "update")
     return bridge.batches
 
 
@@ -244,9 +234,7 @@ def idempotent_parquet_writer(base_dir: str):
     return write
 
 
-def run_fanout_stream(
-    stream_df: DataFrame, writers: list, state_partitions: int | None = None
-) -> None:
+def run_fanout_stream(stream_df: DataFrame, writers: list) -> None:
     """Fan one stream out to N sinks with the batch computed ONCE.
 
     The naive form — N ``writeStream`` queries on the same source — scans
@@ -265,7 +253,7 @@ def run_fanout_stream(
         finally:
             batch_df.unpersist()
 
-    run_foreach_batch(stream_df, handle, "append", state_partitions)
+    run_foreach_batch(stream_df, handle, "append")
 
 
 class RedisMetricsStore:
@@ -361,7 +349,6 @@ def run_scd2_stream(
     attr: str,
     ts_col: str,
     order_col: str,
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Streaming SCD2 dimension maintenance: consume a CDC change stream
     via ``foreachBatch``, fold each micro-batch into a history-keeping
@@ -445,7 +432,7 @@ def run_scd2_stream(
             f"{snapshot_dir}/version={batch_id}"
         )
 
-    run_foreach_batch(stream, apply, "append", state_partitions)
+    run_foreach_batch(stream, apply, "append")
     versions = sorted(
         int(d.split("=")[1])
         for d in list_subdir_names(spark, snapshot_dir)

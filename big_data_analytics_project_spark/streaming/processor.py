@@ -21,11 +21,16 @@ This rebuild:
 State scale notes: watermark bounds state store growth; session windows
 merge in the state store keyed by (user, session); update-mode emission
 keeps sink volume proportional to changed keys per micro-batch.
+
+Every runner here is a bounded drain: :func:`drain_available` replays all
+available input into a throwaway checkpoint and decides the state-partition
+count.  Production runs the same shapes as long-running queries with a
+durable checkpoint; such a query takes ``spark.sql.shuffle.partitions`` at
+its first start, so set it at launch.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import tempfile
 
@@ -36,18 +41,43 @@ from pyspark.sql.streaming import DataStreamWriter
 from ..schemas import EVENTS
 
 
-def stage_events_as_json_stream(
-    spark: SparkSession, sf_dir: str, n_files: int = 4, out_dir: str | None = None
-) -> str:
-    """Replay the fixture ``events`` table as a directory of ts-ordered JSON
-    files — the file-source analog of the reference's chunked CSV→Kafka
-    producer (``kafka_producer.py:107-119``).  With
-    ``maxFilesPerTrigger=1`` each file becomes one micro-batch, so
-    watermark advancement across batches is exercised deterministically.
+# Replayable fixture tables: the JSON projection (SQL expressions) and the
+# replay order.  Events carry ts as text (``read_event_stream`` parses it
+# back); embeddings widen float→double BEFORE the JSON write — the widening
+# is exact and Jackson's doubles round-trip bit-exactly, so the streamed
+# vector equals the batch path's ``as_double(embedding)`` to the last bit.
+_REPLAY = {
+    "events": (
+        ("event_id", "date_format(ts, 'yyyy-MM-dd HH:mm:ss.SSSSSS') AS ts",
+         "user_id", "event_type", "value", "props"),
+        ("ts", "event_id"),
+    ),
+    "documents": (("doc_id", "text"), ("doc_id",)),
+    "embeddings": (
+        ("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS embedding"),
+        ("vec_id",),
+    ),
+}
 
-    The write is distributed (range-partitioned by ts → executors write the
-    chunk files directly; no driver collect).  File mtimes are then set to
-    follow the ts ranges so the file source replays in event-time order.
+
+def stage_json_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    n_files: int = 4,
+    out_dir: str | None = None,
+) -> str:
+    """Replay a fixture table (``events``, ``documents`` or ``embeddings``)
+    as a directory of JSON chunk files in its replay order — the file-source
+    analog of the reference's chunked CSV→Kafka producer
+    (``kafka_producer.py:107-119``).  With ``maxFilesPerTrigger=1`` each
+    file becomes one micro-batch, so watermark advancement across batches
+    is exercised deterministically.
+
+    The write is distributed (range-partitioned by the replay order →
+    executors write the chunk files directly; no driver collect).  File
+    mtimes are then set to follow the ranges so the file source replays
+    oldest first.
 
     Deliberately DRIVER-LOCAL (tempfile + os.utime + os.listdir): this is
     the local-mode replay FIXTURE standing in for the Kafka source, not a
@@ -55,20 +85,15 @@ def stage_events_as_json_stream(
     persisted indexes/sinks (sources.sinks.index_scratch_dir), it never
     needs to exist on a cluster, where the stream reads from a broker.
     """
-    out_dir = out_dir or tempfile.mkdtemp(prefix="bdap_stream_")
     from ..sources import read_table
 
-    ev = read_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
+    columns, order = _REPLAY[table]
+    out_dir = out_dir or tempfile.mkdtemp(prefix=f"bdap_{table}_stream_")
     (
-        ev.repartitionByRange(n_files, "ts", "event_id")
-        .sortWithinPartitions("ts", "event_id")
+        read_table(spark, sf_dir, table)
+        .selectExpr(*columns)
+        .repartitionByRange(n_files, *order)
+        .sortWithinPartitions(*order)
         .write.mode("overwrite")
         .json(out_dir)
     )
@@ -83,87 +108,13 @@ def stage_events_as_json_stream(
     return out_dir
 
 
-def stage_docs_as_json_stream(
-    spark: SparkSession, sf_dir: str, n_files: int = 4, out_dir: str | None = None
-) -> str:
-    """Replay the fixture ``documents`` table as doc_id-ordered JSON chunk
-    files — the document-corpus analog of ``stage_events_as_json_stream``
-    (same sanctioned driver-local fixture pattern; see that docstring),
-    used by the streaming index-maintenance queries where the arriving
-    unit is a document, not an event."""
-    out_dir = out_dir or tempfile.mkdtemp(prefix="bdap_docstream_")
-    from ..sources import read_table
-
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    (
-        docs.repartitionByRange(n_files, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .json(out_dir)
-    )
-    parts = sorted(
-        f for f in os.listdir(out_dir) if f.startswith("part-") and f.endswith(".json")
-    )
-    base = 1_600_000_000
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(out_dir, f), (base + i, base + i))
-    return out_dir
-
-
-def stage_embeddings_as_json_stream(
-    spark: SparkSession, sf_dir: str, n_files: int = 4, out_dir: str | None = None
-) -> str:
-    """Replay the fixture ``embeddings`` table as vec_id-ordered JSON chunk
-    files — the vector-corpus analog of ``stage_docs_as_json_stream``
-    (same sanctioned driver-local fixture pattern), used by the streaming
-    ANN index-maintenance queries where the arriving unit is a vector.
-
-    The embedding is cast float→double BEFORE the JSON write: the double
-    widening is exact, and Jackson's double serialization round-trips
-    bit-exactly through the text file, so the streamed vector equals the
-    batch path's ``as_double(embedding)`` and cosine parity with the
-    DuckDB oracle (which casts the parquet floats the same way) holds to
-    the last bit."""
-    out_dir = out_dir or tempfile.mkdtemp(prefix="bdap_embstream_")
-    from ..sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    (
-        emb.repartitionByRange(n_files, "vec_id")
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite")
-        .json(out_dir)
-    )
-    parts = sorted(
-        f for f in os.listdir(out_dir) if f.startswith("part-") and f.endswith(".json")
-    )
-    base = 1_600_000_000
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(out_dir, f), (base + i, base + i))
-    return out_dir
-
-
-def read_embedding_stream(
-    spark: SparkSession, json_dir: str, max_files_per_trigger: int = 1
+def read_json_stream(
+    spark: SparkSession, json_dir: str, schema: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    """Unbounded read of a staged embedding stream (explicit schema; swap
+    """Unbounded read of a staged JSON stream with an explicit schema (swap
     for the Kafka form in a broker deployment, like read_event_stream)."""
     return (
-        spark.readStream.schema("vec_id LONG, embedding ARRAY<DOUBLE>")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(json_dir)
-    )
-
-
-def read_doc_stream(
-    spark: SparkSession, json_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """Unbounded read of a staged document stream (explicit schema; swap
-    for the Kafka form in a broker deployment, like read_event_stream)."""
-    return (
-        spark.readStream.schema("doc_id LONG, text STRING")
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(json_dir)
     )
@@ -204,12 +155,9 @@ def read_event_stream(
     schema + timestamp parse (JSON source; swap ``format('kafka')`` +
     ``from_json(col('value')...)`` for the broker deployment)."""
     raw_schema = "event_id LONG, ts STRING, user_id LONG, event_type STRING, value DOUBLE, props STRING"
-    return (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(json_dir)
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
+    return read_json_stream(
+        spark, json_dir, raw_schema, max_files_per_trigger
+    ).withColumn("ts", F.to_timestamp("ts"))
 
 
 def tumbling_features(stream: DataFrame, watermark: str = "10 minutes",
@@ -332,78 +280,61 @@ def dedup_stream(
     return wm.dropDuplicatesWithinWatermark(keys)
 
 
-class _state_partitions:
-    """Pin the number of stateful-operator partitions for a streaming query.
+# Drains cap their state-store count here.  Each drain is a bounded
+# replay (≤~100k rows per trigger) into a throwaway checkpoint, where more
+# state stores only add per-batch lifecycle cost: 32 → 8 took the sf0.1
+# stream-stream outer join from 8.2 s to 2.9 s.
+_DRAIN_STATE_PARTITIONS = 8
 
-    Spark fixes state partitioning (= ``spark.sql.shuffle.partitions``) at
-    the query's FIRST checkpoint and every stateful operator then carries
-    that many state-store instances per micro-batch — so production jobs
-    size it deliberately: rows-per-trigger ÷ target-partition-rows, not the
-    batch-side shuffle default.  For the bounded fixture replays here the
-    per-trigger volume is ≤~100k rows, where 32 state stores are pure
-    lifecycle overhead (measured 8.2 s → 2.9 s on the stream-stream outer
-    join at sf0.1 going 32 → 8).  On a real cluster the same knob scales
-    UP with trigger volume; semantics never depend on it.
-    """
-
-    def __init__(
-        self, spark: SparkSession, n: int | None, rocksdb: bool = False
-    ):
-        self.spark, self.n, self.rocksdb = spark, n, rocksdb
-        self._saved: dict[str, str] = {}
-
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    _ROCKSDB = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-
-    def _set(self, key: str, value: str) -> None:
-        self._saved[key] = self.spark.conf.get(key, None)
-        self.spark.conf.set(key, value)
-
-    def __enter__(self):
-        if self.n is not None:
-            self._set("spark.sql.shuffle.partitions", str(self.n))
-        if self.rocksdb:
-            # the at-scale state backend: state lives off-heap/on-disk in
-            # RocksDB instead of in-heap hash maps — large watermark
-            # horizons and key cardinalities stop pressuring the JVM heap.
-            # Bundled with Spark (no extra jar); picked up at query start.
-            self._set(self._PROVIDER_KEY, self._ROCKSDB)
-
-    def __exit__(self, *exc):
-        for key, prev in self._saved.items():
-            if prev is None:
-                self.spark.conf.unset(key)
-            else:
-                self.spark.conf.set(key, prev)
+_STATE_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 
 
 def drain_available(
-    spark: SparkSession,
-    writer: DataStreamWriter,
-    state_partitions: int | None = None,
-    rocksdb: bool = False,
+    spark: SparkSession, writer: DataStreamWriter, rocksdb: bool = False
 ) -> None:
     """Run a configured ``writeStream`` over all available input and wait
-    for it: availableNow trigger (a deterministic micro-batch sequence),
-    a throwaway ``bdap_ckpt_`` checkpoint deleted on return, and the
-    state settings of :class:`_state_partitions` in force before
-    ``start()`` (Spark reads them when the query starts).  Every drain in
-    ``processor`` and ``bridge`` goes through here."""
-    with tempfile.TemporaryDirectory(prefix="bdap_ckpt_") as ckpt:
-        with _state_partitions(spark, state_partitions, rocksdb):
+    for it: availableNow trigger (a deterministic micro-batch sequence)
+    into a throwaway ``bdap_ckpt_`` checkpoint deleted on return.  Every
+    drain in ``processor`` and ``bridge`` goes through here, and this is
+    the one place that decides a drain's state-partition count.
+
+    Spark fixes a query's state partitioning (= ``spark.sql.shuffle.
+    partitions``) at its first start, so the count is set on the session
+    for the drain and restored afterwards:
+    ``min(_DRAIN_STATE_PARTITIONS, the session's shuffle partitions)``.
+    Semantics never depend on it.  ``rocksdb`` switches the state store to
+    the at-scale backend the same way: state lives off-heap/on-disk in
+    RocksDB instead of in-heap hash maps, so large watermark horizons and
+    key cardinalities stop pressuring the JVM heap (bundled with Spark)."""
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    confs = {
+        "spark.sql.shuffle.partitions": str(min(_DRAIN_STATE_PARTITIONS, shuffle))
+    }
+    if rocksdb:
+        confs[_STATE_PROVIDER_KEY] = _ROCKSDB_PROVIDER
+    saved = {key: spark.conf.get(key, None) for key in confs}
+    try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        with tempfile.TemporaryDirectory(prefix="bdap_ckpt_") as ckpt:
             writer.option("checkpointLocation", ckpt).trigger(
                 availableNow=True
             ).start().awaitTermination()
+    finally:
+        for key, prev in saved.items():
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
 
 
 def run_to_completion(
     agg: DataFrame,
     query_name: str,
     output_mode: str = "complete",
-    state_partitions: int | None = None,
     rocksdb: bool = False,
 ) -> DataFrame:
     """Execute a streaming aggregate over all available input (availableNow
@@ -418,7 +349,6 @@ def run_to_completion(
     drain_available(
         spark,
         agg.writeStream.outputMode(output_mode).format("memory").queryName(query_name),
-        state_partitions,
         rocksdb,
     )
     return spark.table(query_name)
@@ -428,16 +358,17 @@ def run_append_to_files(
     agg: DataFrame,
     out_dir: str,
     fmt: str = "parquet",
-    state_partitions: int | None = None,
     rocksdb: bool = False,
 ) -> DataFrame:
-    """The production streaming shape (100 TB path): ``append`` output mode
-    into a file sink.  Each window group is written exactly once, when the
-    watermark passes its end — state is evicted as windows finalize, so
-    state-store size is bounded by (watermark horizon × active keys), and
-    sink volume is proportional to *finalized* windows per batch, never to
-    total state (``complete`` re-emits everything every batch and is kept
-    only for the bounded oracle harness).
+    """A bounded drain of the production streaming shape (100 TB path):
+    ``append`` output mode into a file sink.  Production runs the same
+    append shape as a long-running query with a durable checkpoint.  Each
+    window group is written exactly once, when the watermark passes its
+    end — state is evicted as windows finalize, so state-store size is
+    bounded by (watermark horizon × active keys), and sink volume is
+    proportional to *finalized* windows per batch, never to total state
+    (``complete`` re-emits everything every batch and is kept only for the
+    bounded oracle harness).
 
     Returns the finalized-window table read back from the sink.  Windows
     still open when the input is exhausted are (correctly) absent: they
@@ -448,7 +379,6 @@ def run_append_to_files(
     drain_available(
         spark,
         agg.writeStream.outputMode("append").format(fmt).option("path", out_dir),
-        state_partitions,
         rocksdb,
     )
     has_data = any(

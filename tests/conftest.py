@@ -35,3 +35,14 @@ def registry():
     from big_data_analytics_project_spark.registry import load_all
 
     return load_all()
+
+
+def _jobs_submitted(spark, group: str, fn) -> int:
+    """Number of Spark jobs ``fn`` submits, recorded through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

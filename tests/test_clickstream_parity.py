@@ -13,6 +13,7 @@ from big_data_analytics_project_spark.plans.clickstream import (
     run_training,
 )
 from big_data_analytics_project_spark.sources.sinks import read_parquet
+from conftest import _jobs_submitted
 
 
 def _make_csv(path: str, n_sessions: int = 200, seed: int = 7) -> dict:
@@ -121,17 +122,6 @@ def test_training_on_synthetic(spark, tmp_path):
     assert all(k in metrics for k in ("f1", "weighted_recall", "accuracy"))
     assert metrics["auc"] >= 0.63, metrics
     assert metrics["f1"] >= 0.54, metrics
-
-
-def _jobs_submitted(spark, group: str, fn) -> int:
-    """Number of Spark jobs ``fn`` submits, recorded through a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_stats_and_class_counts_take_one_aggregate_each(spark, tmp_path):

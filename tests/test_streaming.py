@@ -5,6 +5,7 @@ import json
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from big_data_analytics_project_spark.streaming import processor as P
 from big_data_analytics_project_spark.streaming.bridge import (
@@ -170,7 +171,7 @@ def test_session_window_merges_within_gap(spark, tmp_path):
 
 
 def test_foreachbatch_bridge_learns_and_sinks(spark, sf_dir, tmp_path):
-    json_dir = P.stage_events_as_json_stream(spark, sf_dir, n_files=3)
+    json_dir = P.stage_json_stream(spark, sf_dir, "events", n_files=3)
     try:
         stream = P.read_event_stream(spark, json_dir, max_files_per_trigger=1)
         agg = P.tumbling_features(stream)
@@ -188,6 +189,88 @@ def test_foreachbatch_bridge_learns_and_sinks(spark, sf_dir, tmp_path):
         shutil.rmtree(json_dir, ignore_errors=True)
 
 
+def test_scoring_bridge_collects_each_micro_batch_once(spark, tmp_path):
+    """Every Spark job a micro-batch's frame runs re-runs the stateful
+    aggregate upstream, so the bridge collects a micro-batch ONCE and
+    applies the T7 empty-batch guard to the collected frame: a non-empty
+    batch costs one job, and an empty one records no batch and writes no
+    metrics entry."""
+    from conftest import _jobs_submitted
+
+    path = tmp_path / "metrics.json"
+    bridge = OnlineScoringBridge(store=MetricsStore(str(path)))
+
+    def features(n):
+        return spark.range(n).selectExpr(
+            "CAST(id % 2 AS BIGINT) AS label", "id AS view_count",
+            "2 * id AS total_events", "CAST(id AS DOUBLE) AS total_value",
+            "id AS unique_items_approx",
+        )
+
+    empty = features(0)
+    bridge(empty, 0)
+    assert bridge.batches == [] and not path.exists()
+
+    batch = features(40)
+    assert _jobs_submitted(spark, "bridge_one_collect", lambda: bridge(batch, 1)) == 1
+    assert [m["batch_id"] for m in bridge.batches] == [1]
+    assert json.loads(path.read_text())["current"]["n_rows"] == 40
+
+
+def test_drain_caps_state_stores_and_restores_session(spark, tmp_path):
+    """drain_available alone decides a drain's state-store count:
+    min(8, the session's spark.sql.shuffle.partitions), as the stateful
+    operator reports it, and the session keeps its own setting."""
+    import time as _time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    d = str(tmp_path / "stream")
+    os.makedirs(d)
+    _write_json(
+        os.path.join(d, "f0.json"),
+        [{"event_id": i, "ts": f"2024-01-02 12:{i:02d}:00", "user_id": i % 3,
+          "event_type": "view", "value": 1.0, "props": "{}"} for i in range(6)],
+    )
+    seen = {}
+
+    class StateParts(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            if p.stateOperators:
+                seen[p.name] = p.stateOperators[0].numShufflePartitions
+
+        def onQueryTerminated(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    listener = StateParts()
+    spark.streams.addListener(listener)
+    try:
+        for n in (4, 17):
+            spark.conf.set(key, str(n))
+            P.run_to_completion(
+                P.tumbling_features(P.read_event_stream(spark, d)),
+                f"t_drain_parts_{n}", "complete",
+            )
+            assert spark.conf.get(key) == str(n)
+        # listener delivery is async; wait briefly for the progress events
+        deadline = _time.time() + 20
+        while _time.time() < deadline and len(seen) < 2:
+            _time.sleep(0.2)
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set(key, before)
+    assert seen == {"t_drain_parts_4": 4, "t_drain_parts_17": 8}
+
+
 def test_fanout_computes_once_and_feeds_every_sink(spark, sf_dir, tmp_path):
     """One stream → two sinks via foreachBatch fan-out: both sinks see the
     complete data, batch directories carry the idempotence contract, and
@@ -198,7 +281,7 @@ def test_fanout_computes_once_and_feeds_every_sink(spark, sf_dir, tmp_path):
         run_fanout_stream,
     )
 
-    json_dir = P.stage_events_as_json_stream(spark, sf_dir, n_files=2)
+    json_dir = P.stage_json_stream(spark, sf_dir, "events", n_files=2)
     stream = P.read_event_stream(spark, json_dir, max_files_per_trigger=1)
 
     raw_dir = str(tmp_path / "raw")
@@ -212,7 +295,6 @@ def test_fanout_computes_once_and_feeds_every_sink(spark, sf_dir, tmp_path):
     run_fanout_stream(
         stream,
         [idempotent_parquet_writer(raw_dir), agg_writer],
-        state_partitions=4,
     )
 
     src_n = spark.read.json(json_dir).count()
@@ -269,13 +351,13 @@ def test_rocksdb_state_store_gives_identical_results(spark, sf_dir):
     must be a pure deployment swap: the same windowed aggregate over the
     same staged replay returns value-identical results under the default
     in-heap provider and under RocksDB."""
-    json_dir = P.stage_events_as_json_stream(spark, sf_dir, n_files=2)
+    json_dir = P.stage_json_stream(spark, sf_dir, "events", n_files=2)
 
     def run(rocksdb, name):
         stream = P.read_event_stream(spark, json_dir, max_files_per_trigger=2)
         out = P.run_to_completion(
             P.tumbling_features(stream), name,
-            output_mode="complete", state_partitions=4, rocksdb=rocksdb,
+            output_mode="complete", rocksdb=rocksdb,
         )
         return {tuple(r) for r in out.collect()}
 
@@ -306,11 +388,11 @@ def test_progress_listener_records_batches(spark, sf_dir, tmp_path):
     store = MetricsStore(str(tmp_path / "progress.json"))
     listener = attach_progress_listener(spark, store)
     try:
-        json_dir = P.stage_events_as_json_stream(spark, sf_dir, n_files=2)
+        json_dir = P.stage_json_stream(spark, sf_dir, "events", n_files=2)
         stream = P.read_event_stream(spark, json_dir, max_files_per_trigger=1)
         P.run_to_completion(
             P.tumbling_features(stream), "t_progress",
-            output_mode="complete", state_partitions=4,
+            output_mode="complete",
         )
         # listener delivery is async; wait briefly for the progress events
         deadline = _time.time() + 20
@@ -336,12 +418,12 @@ def test_streaming_scd2_maintains_dimension_history(spark, sf_dir, tmp_path):
         run_scd2_stream,
     )
 
-    json_dir = P.stage_events_as_json_stream(spark, sf_dir, n_files=2)
+    json_dir = P.stage_json_stream(spark, sf_dir, "events", n_files=2)
     stream = P.read_event_stream(spark, json_dir, max_files_per_trigger=1)
     snap_dir = str(tmp_path / "dim_user_activity")
     final = run_scd2_stream(
         stream, snap_dir, key="user_id", attr="event_type",
-        ts_col="ts", order_col="event_id", state_partitions=4,
+        ts_col="ts", order_col="event_id",
     )
 
     rows = final.collect()
@@ -371,16 +453,12 @@ def test_streaming_scd2_maintains_dimension_history(spark, sf_dir, tmp_path):
     ) == ["version=0", "version=1"]
 
 
-def test_staged_files_replay_in_event_time_order(spark, sf_dir):
-    """The custom-sessionization oracle equivalence (ADVICE r8) assumes the
-    staged JSON files replay in non-decreasing ts order across triggers:
-    every file's ts range must be disjoint from the next file's (boundary
-    ties allowed — range partitioning splits on (ts, event_id)), the
-    part-file NAMES must sort in range order, and the stamped mtimes (what
-    the streaming file source actually orders discovery by) must ascend
-    with that name order.  If staging ever loses this property, the 10-min
-    watermark would silently drop late rows that the SQL oracle counts."""
-    json_dir = P.stage_events_as_json_stream(spark, sf_dir, n_files=4)
+def _assert_staged_in_key_order(spark, sf_dir, table, key):
+    """Stage ``table`` as four JSON files and check every file's ``key``
+    range is disjoint from the next file's (boundary ties allowed), the
+    part-file names sort in range order, and the stamped mtimes ascend
+    strictly with that name order."""
+    json_dir = P.stage_json_stream(spark, sf_dir, table, n_files=4)
     try:
         parts = sorted(
             f
@@ -391,7 +469,7 @@ def test_staged_files_replay_in_event_time_order(spark, sf_dir):
         ranges = []
         for f in parts:
             ts = [
-                json.loads(line)["ts"]
+                json.loads(line)[key]
                 for line in open(os.path.join(json_dir, f))
                 if line.strip()
             ]
@@ -409,6 +487,27 @@ def test_staged_files_replay_in_event_time_order(spark, sf_dir):
         shutil.rmtree(json_dir, ignore_errors=True)
 
 
+def test_staged_files_replay_in_event_time_order(spark, sf_dir):
+    """The custom-sessionization oracle equivalence (ADVICE r8) assumes the
+    staged JSON files replay in non-decreasing ts order across triggers:
+    every file's ts range must be disjoint from the next file's (boundary
+    ties allowed — range partitioning splits on (ts, event_id)), the
+    part-file NAMES must sort in range order, and the stamped mtimes (what
+    the streaming file source actually orders discovery by) must ascend
+    with that name order.  If staging ever loses this property, the 10-min
+    watermark would silently drop late rows that the SQL oracle counts."""
+    _assert_staged_in_key_order(spark, sf_dir, "events", "ts")
+
+
+@pytest.mark.parametrize(
+    "table, key", [("documents", "doc_id"), ("embeddings", "vec_id")]
+)
+def test_staged_replays_keep_id_order(spark, sf_dir, table, key):
+    """The document and embedding replays keep the same ordering property
+    on their ids, through the same stager as the event replay."""
+    _assert_staged_in_key_order(spark, sf_dir, table, key)
+
+
 def test_frozen_scoring_is_batch_boundary_invariant(spark, sf_dir):
     """The round-13 oracle lift dual rests on this property: a FROZEN
     model is a pure per-row function, so append-mode tumbling features
@@ -424,7 +523,7 @@ def test_frozen_scoring_is_batch_boundary_invariant(spark, sf_dir):
         run_foreach_batch,
     )
 
-    json_dir = P.stage_events_as_json_stream(spark, sf_dir, n_files=4)
+    json_dir = P.stage_json_stream(spark, sf_dir, "events", n_files=4)
     try:
         def score(trigger_files):
             stream = P.read_event_stream(
@@ -466,7 +565,7 @@ def test_scd2_fold_is_batch_boundary_invariant(spark, sf_dir, tmp_path):
         run_scd2_stream,
     )
 
-    json_dir = P.stage_events_as_json_stream(spark, sf_dir, n_files=4)
+    json_dir = P.stage_json_stream(spark, sf_dir, "events", n_files=4)
 
     def fold(trigger_files, tag):
         stream = P.read_event_stream(
@@ -475,7 +574,6 @@ def test_scd2_fold_is_batch_boundary_invariant(spark, sf_dir, tmp_path):
         final = run_scd2_stream(
             stream, str(tmp_path / f"snap_{tag}"), key="user_id",
             attr="event_type", ts_col="ts", order_col="event_id",
-            state_partitions=4,
         )
         return sorted(
             (r["user_id"], r["event_type"], r["valid_from_epoch"],
@@ -506,7 +604,7 @@ def test_band_index_stream_ingest_is_batch_boundary_invariant(spark, sf_dir):
         run_foreach_batch,
     )
 
-    json_dir = P.stage_docs_as_json_stream(spark, sf_dir, n_files=4)
+    json_dir = P.stage_json_stream(spark, sf_dir, "documents", n_files=4)
     try:
         def census(trigger_files):
             base = tempfile.mkdtemp(prefix="bdap_ingest_test_")
@@ -520,8 +618,9 @@ def test_band_index_stream_ingest_is_batch_boundary_invariant(spark, sf_dir):
                     .parquet(f"{base}/ingest_batch={batch_id}")
                 )
 
-            stream = P.read_doc_stream(
-                spark, json_dir, max_files_per_trigger=trigger_files
+            stream = P.read_json_stream(
+                spark, json_dir, "doc_id LONG, text STRING",
+                max_files_per_trigger=trigger_files,
             )
             run_foreach_batch(stream, ingest, output_mode="append")
             idx = spark.read.parquet(base)
@@ -695,7 +794,6 @@ def test_frozen_scoring_column_rejects_malformed_model():
     zip would silently truncate and score with fewer features, where
     predict_proba raises a shape error)."""
     import numpy as np
-    import pytest
 
     from big_data_analytics_project_spark.ml.online import (
         FEATURE_COLUMNS,
@@ -733,7 +831,7 @@ def test_embedding_stream_staging_roundtrips_doubles_exactly(spark, sf_dir):
     from big_data_analytics_project_spark.functions.vector import as_double
     from big_data_analytics_project_spark.sources import read_table
 
-    json_dir = P.stage_embeddings_as_json_stream(spark, sf_dir, n_files=4)
+    json_dir = P.stage_json_stream(spark, sf_dir, "embeddings", n_files=4)
     try:
         staged = spark.read.schema("vec_id LONG, embedding ARRAY<DOUBLE>").json(
             json_dir
@@ -768,7 +866,7 @@ def test_ivf_stream_ingest_is_batch_boundary_invariant(spark, sf_dir):
         run_foreach_batch,
     )
 
-    json_dir = P.stage_embeddings_as_json_stream(spark, sf_dir, n_files=4)
+    json_dir = P.stage_json_stream(spark, sf_dir, "embeddings", n_files=4)
     try:
         def census(trigger_files):
             base = tempfile.mkdtemp(prefix="bdap_ivf_ingest_test_")
@@ -788,8 +886,9 @@ def test_ivf_stream_ingest_is_batch_boundary_invariant(spark, sf_dir):
                     .parquet(f"{base}/ingest_batch={batch_id}")
                 )
 
-            stream = P.read_embedding_stream(
-                spark, json_dir, max_files_per_trigger=trigger_files
+            stream = P.read_json_stream(
+                spark, json_dir, "vec_id LONG, embedding ARRAY<DOUBLE>",
+                max_files_per_trigger=trigger_files,
             )
             run_foreach_batch(stream, ingest, output_mode="append")
             idx = spark.read.parquet(base)
