@@ -7,8 +7,8 @@ rebuild on ``pyspark.ml.recommendation.ALS(implicitPrefs=True)``, which
 implements exactly that confidence weighting (Hu-Koren-Volinsky).
 
 Interactions on the fixtures: user_id × item (events.props.k as the item
-id), strength = interaction count.  Recall@10 is evaluated with a
-leave-last-out split per user (by event time).
+id), strength = interaction count, built by the leave-last-out split per
+user (by event time) that Recall@10 is evaluated on.
 """
 
 from __future__ import annotations
@@ -17,18 +17,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources import read_table
-
-
-def interactions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = read_table(spark, sf_dir, "events")
-    return (
-        ev.select(
-            F.col("user_id").cast("int").alias("user"),
-            F.get_json_object("props", "$.k").cast("int").alias("item"),
-        )
-        .groupBy("user", "item")
-        .agg(F.count("*").cast("float").alias("strength"))
-    )
 
 
 def train_als(

@@ -108,27 +108,11 @@ def inplan_global_rank(
     )
 
 
-def ntile_from_rank(rank: Column, n: int, k: int) -> Column:
-    """SQL ``ntile(k)`` from a 1-based global rank with ``n`` total rows:
-    the standard base/remainder bucket-size rule, bit-identical to the
-    window function (first ``n mod k`` buckets get ``base+1`` rows)."""
-    base, rem = divmod(n, k)
-    if base == 0:
-        return rank.cast("long")
-    return (
-        F.when(rank <= rem * (base + 1), (rank - 1) / (base + 1))
-        .otherwise(rem + (rank - rem * (base + 1) - 1) / base)
-        .cast("long")
-        + 1
-    )
-
-
 def ntile_from_rank_n(rank: Column, n: Column, k: int) -> Column:
-    """:func:`ntile_from_rank` with the total row count as a COLUMN (from
-    ``inplan_global_rank``'s ``n_col``) — the identical base/remainder
-    rule with the identical double-division + truncation arithmetic, so
-    every rank's bucket is bit-equal to the int-``n`` form (the operands
-    are the same exact integers; IEEE division and the long cast agree).
+    """SQL ``ntile(k)`` from a 1-based global rank, with the total row
+    count ``n`` as a COLUMN (from ``inplan_global_rank``'s ``n_col``): the
+    standard base/remainder bucket-size rule, bit-identical to the window
+    function (first ``n mod k`` buckets get ``base+1`` rows).
     The ``base == 0`` branch short-circuits per row, so the divisions by
     ``base`` are never evaluated when it is zero."""
     base = F.floor(n / k).cast("long")

@@ -1,4 +1,6 @@
-"""Flagship pipeline: leakage-free sessionization → session feature table.
+"""Leakage-free sessionization operators: the first-conversion marker and
+cutoff that the clickstream features and the flagship queries build on,
+and inactivity-gap session assignment.
 
 Reference semantics (clean-room rebuild, not a copy):
  - first-conversion marker per session via a partition-wide window aggregate
@@ -10,8 +12,6 @@ Reference semantics (clean-room rebuild, not a copy):
  - leakage cutoff keeps rows with no conversion OR ts <= first conversion
    (``preprocessing.py:58-61``; the ``<=`` tie rule is load-bearing —
    SURVEY §7.2.4).
- - multi-measure hash aggregate per session (``preprocessing.py:81-100``),
-   numeric nulls → 0 (``preprocessing.py:102``).
 
 Scale notes (100 TB): the single shuffle key (session id) is the only
 exchange; skewed sessions are handled by AQE skew-join/partition splitting.
@@ -69,72 +69,6 @@ def leakage_cutoff(df: DataFrame, ts: str, marker: str = "first_conversion_ts") 
     that never convert.  ``<=`` (not ``<``) so the conversion row itself and
     its timestamp-ties survive — exact reference tie semantics."""
     return df.where(F.col(marker).isNull() | (F.col(ts) <= F.col(marker)))
-
-
-def session_features(
-    df: DataFrame,
-    key: str,
-    ts: str,
-    event_type: str = "event_type",
-    value: str = "value",
-    item: str | None = None,
-    conversion: str = "purchase",
-    count_types: tuple[str, ...] = ("view",),
-) -> DataFrame:
-    """Multi-measure session aggregate (reference §1.3 generalized).
-
-    Produces, per ``key``: binary conversion ``label``, one ``<t>_count``
-    per requested event type, floor-second ``session_duration_sec``,
-    ``avg_value`` / ``max_value``, and ``unique_items`` when an item column
-    is given.  All computed in one hash aggregate (partial+final, map-side
-    combine) — no driver round-trips.
-    """
-    aggs = [
-        F.max(
-            F.when(F.col(event_type) == conversion, F.lit(1)).otherwise(F.lit(0))
-        ).cast("long").alias("label"),
-    ]
-    for t in count_types:
-        aggs.append(F.count(F.when(F.col(event_type) == t, F.lit(1))).alias(f"{t}_count"))
-    aggs.extend(
-        [
-            (
-                F.unix_timestamp(F.max(ts)) - F.unix_timestamp(F.min(ts))
-            ).alias("session_duration_sec"),
-            F.avg(value).alias("avg_value"),
-            F.max(value).alias("max_value"),
-        ]
-    )
-    if item is not None:
-        aggs.append(F.countDistinct(item).alias("unique_items"))
-    return df.groupBy(key).agg(*aggs).fillna(0)
-
-
-def sessionize(
-    df: DataFrame,
-    key: str,
-    ts: str,
-    event_type: str = "event_type",
-    value: str = "value",
-    item: str | None = None,
-    conversion: str = "purchase",
-    count_types: tuple[str, ...] = ("view",),
-    use_join: bool = False,
-) -> DataFrame:
-    """Full flagship pipeline: mark first conversion → cutoff → aggregate."""
-    mark = first_conversion_join if use_join else first_conversion_window
-    marked = mark(df, key, ts, event_type=event_type, conversion=conversion)
-    kept = leakage_cutoff(marked, ts)
-    return session_features(
-        kept,
-        key,
-        ts,
-        event_type=event_type,
-        value=value,
-        item=item,
-        conversion=conversion,
-        count_types=count_types,
-    )
 
 
 def gap_sessionize(

@@ -8,7 +8,8 @@ value-hash verifiable.
 Operators:
 - token statistics (whitespace + BPE-ish regex token counting)
 - quality scoring (length / punctuation / stopword / uppercase ratios)
-- language id (marker-token overlap heuristic, deterministic argmax)
+- language-id marker tokens (the overlap scoring and its argmax cascade
+  are in ``plans/text_queries.py``)
 - content fingerprinting (md5 of a normalized form — the exact-dedup key)
 - PII redaction (email/URL masking + hit counts — the curation scrub pass)
 """
@@ -132,28 +133,3 @@ def pii_counts(text: Column) -> tuple[Column, Column]:
     n_emails = F.size(F.regexp_extract_all(text, F.lit(EMAIL_PATTERN), 0)).cast("long")
     n_urls = F.size(F.regexp_extract_all(text, F.lit(URL_PATTERN), 0)).cast("long")
     return n_emails, n_urls
-
-
-def lang_scores(toks: Column) -> list[Column]:
-    out = []
-    for lang, markers in LANG_MARKERS.items():
-        arr = F.array(*[F.lit(m) for m in markers])
-        out.append(F.size(F.array_intersect(toks, arr)).cast("long").alias(f"score_{lang}"))
-    return out
-
-
-def predicted_lang(score_cols: dict[str, Column]) -> Column:
-    """Deterministic argmax over language scores; ties broken by language
-    code order (stable across engines)."""
-    langs = sorted(LANG_MARKERS)
-    best = None
-    best_score = None
-    for lang in langs:
-        s = score_cols[lang]
-        if best is None:
-            best, best_score = F.lit(lang), s
-        else:
-            cond = s > best_score
-            best = F.when(cond, F.lit(lang)).otherwise(best)
-            best_score = F.when(cond, s).otherwise(best_score)
-    return best

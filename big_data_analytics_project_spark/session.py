@@ -12,11 +12,27 @@ the scale-friendly configuration the default everywhere:
 - Kryo serializer.
 - UTC session timezone so timestamp semantics are engine-independent
   (the reference's string-vs-timestamp trap, SURVEY §1.4).
+
+When this process launches the driver JVM itself, ``get_spark`` starts it
+from a dynamic AppCDS (class-data-sharing) archive, which shortens the cold
+start: most of it is the JVM loading and verifying Spark's classes.  The
+archive lives under ``$XDG_CACHE_HOME/spark-graft/`` (``~/.cache`` when
+unset), keyed by the JDK and the driver classpath.  A launch that finds no
+complete archive for its key dumps one when its JVM exits, which takes
+about 10 s more at exit; deleting the directory resets it.  The JVM checks
+the archive against its own classpath and JDK and falls back to normal
+class loading on a mismatch, so a stale archive costs speed, never
+correctness.  Cluster drivers are launched by their submitter and get no
+archive; ``emit_properties`` leaves the option out.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -80,9 +96,122 @@ def get_spark(
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or default_parallelism())
     if extra_conf:
         conf.update(extra_conf)
+    cds = _class_data_sharing(conf)
+    conf_dir = None
+    if cds is not None:
+        # defaultJavaOptions is prepended to extraJavaOptions, which callers
+        # set themselves and would otherwise overwrite the option
+        option, conf_dir = cds
+        user = conf.get("spark.driver.defaultJavaOptions")
+        conf["spark.driver.defaultJavaOptions"] = f"{option} {user}" if user else option
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    with _spark_conf_dir(conf_dir):
+        return builder.getOrCreate()
+
+
+_CDS_MAGIC = bytes.fromhex("a8ab0bf0")  # 0xf00baba8 as the JVM writes it (little-endian), last
+# Other entries the launcher puts on the driver classpath: not keyed, so any
+# of them means no archive (a non-empty directory also blocks the dump).
+_CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
+                  "SPARK_PREPEND_CLASSES")
+
+
+def _launch_conf_dir(spark_home: str, cds_dir: str) -> str | None:
+    """The empty conf directory to launch with, or None for no archive.
+    JDK 17 will not dump with a non-empty directory on the classpath, so
+    ``$SPARK_HOME/conf`` is swapped for an empty directory, but only when
+    the user set no ``SPARK_CONF_DIR`` and it holds nothing but templates:
+    no file Spark would read is ever hidden."""
+    if os.environ.get("SPARK_CONF_DIR"):
+        return None
+    home_conf = os.path.join(spark_home, "conf")
+    if os.path.isdir(home_conf) and not all(
+            f.endswith(".template") for f in os.listdir(home_conf)):
+        return None
+    empty = os.path.join(cds_dir, "conf")
+    os.makedirs(empty, exist_ok=True)
+    return None if os.listdir(empty) else empty
+
+
+def _cds_key(conf_dir: str, jars_dir: str) -> str | None:
+    """Hash of the JDK that ``spark-class`` runs and of the driver classpath
+    (conf directory, then each jar's name, size and mtime, which the JVM
+    checks too), or None when no JDK is found."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    if not java or not os.path.exists(java):
+        return None
+    java = os.path.realpath(java)
+    h = hashlib.sha256(f"{java}\n{conf_dir}\n".encode())
+    release = os.path.join(os.path.dirname(os.path.dirname(java)), "release")
+    if os.path.isfile(release):
+        with open(release, "rb") as f:
+            h.update(f.read())
+    for name in sorted(os.listdir(jars_dir)):
+        st = os.stat(os.path.join(jars_dir, name))
+        h.update(f"{name} {st.st_size} {st.st_mtime_ns}\n".encode())
+    return h.hexdigest()[:16]
+
+
+def _archive_complete(path: str) -> bool:
+    try:
+        with open(path, "rb") as f:
+            return f.read(4) == _CDS_MAGIC
+    except OSError:
+        return False
+
+
+def _class_data_sharing(conf: dict[str, str]) -> tuple[str, str] | None:
+    """``(java options, conf dir)`` for launching the driver JVM from an
+    AppCDS archive, or None when this process launches no JVM or the
+    archive cannot be used.  Maps a complete archive; otherwise dumps one at
+    JVM exit, first deleting the incomplete file and other keys' archives.
+    Never raises for a missing or unwritable cache."""
+    from pyspark import SparkContext
+    from pyspark.find_spark_home import _find_spark_home
+
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return None
+    if "spark.driver.extraClassPath" in conf or any(os.environ.get(v) for v in _CLASSPATH_ENV):
+        return None
+    spark_home = _find_spark_home()
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache")
+    cds_dir = os.path.join(cache, "spark-graft")
+    try:
+        os.makedirs(cds_dir, exist_ok=True)
+        if not os.access(cds_dir, os.W_OK):
+            return None
+        conf_dir = _launch_conf_dir(spark_home, cds_dir)
+        key = conf_dir and _cds_key(conf_dir, os.path.join(spark_home, "jars"))
+        if not key:
+            return None
+        archive = os.path.join(cds_dir, f"driver-{key}.jsa")
+        # a dump logs one warning per skipped class (thousands) to stdout,
+        # which can fill a pipe whose reader has stopped reading it
+        quiet = "-Xlog:cds*=off"
+        if _archive_complete(archive):
+            return f"-XX:SharedArchiveFile={archive} {quiet}", conf_dir
+        for stale in glob.glob(os.path.join(cds_dir, "driver-*.jsa")):
+            os.remove(stale)
+    except OSError:
+        return None
+    return f"-XX:ArchiveClassesAtExit={archive} {quiet}", conf_dir
+
+
+@contextmanager
+def _spark_conf_dir(path: str | None):
+    """``SPARK_CONF_DIR`` set to ``path`` for the JVM launch only."""
+    old = os.environ.get("SPARK_CONF_DIR")
+    if path is not None:
+        os.environ["SPARK_CONF_DIR"] = path
+    try:
+        yield
+    finally:
+        if old is None:
+            os.environ.pop("SPARK_CONF_DIR", None)
+        else:
+            os.environ["SPARK_CONF_DIR"] = old
 
 
 def tune_for_oracle(spark: SparkSession) -> SparkSession:

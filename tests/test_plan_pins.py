@@ -5,6 +5,8 @@ edge build would still produce correct rows)."""
 
 import re
 
+import pytest
+
 
 def _plan(registry, spark, sf_dir, name: str) -> str:
     spark.catalog.clearCache()
@@ -82,38 +84,96 @@ def test_snapshot_diff_is_one_shuffled_join_no_broadcast(registry, spark, sf_dir
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_rank_consumers_have_no_single_reducer_exchange(registry, spark, sf_dir):
-    """Every consumer of the global-rank operators exists precisely to
-    avoid a global Window.orderBy — whose plan signature is an Exchange
-    SinglePartition funneling the dataset through one task.  A regression
-    to a naive ntile/row_number would reintroduce it.  Since the r16 move
-    to ``inplan_global_rank``, the WHOLE multi-rank pipeline is one plan
-    (no lineage-truncating pin hides earlier ranks), so every rank
-    contributes one visible Window — each the per-range-partition local
-    row_number, partitioned by __pid, never partitionless."""
-    for name, n_ranks in (
-        ("window_distribution", 1),
-        ("rfm_customer_segments", 3),
-        ("profile_decile_order_totals", 1),
-    ):
-        plan = _plan(registry, spark, sf_dir, name)
+def _execution_plans(spark, run) -> list[str]:
+    """Call ``run`` and return the physical plan (AQE's final one where it
+    re-planned) of every SQL execution it started, oldest first.  Each
+    execution keeps its own plan, so a lazy ``localCheckpoint`` that
+    truncates the final frame's lineage cannot hide the plan that fed it."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark._jsc.sc().listenerBus()
+
+    def newest_first():
+        bus.waitUntilEmpty()
+        for i in reversed(range(store.executionsCount())):
+            yield store.executionsList(i, 1).head()
+
+    last = next((e.executionId() for e in newest_first()), -1)
+    mode = spark.conf.get("spark.sql.ui.explainMode")
+    spark.conf.set("spark.sql.ui.explainMode", "simple")  # the tree form, as executedPlan prints
+    try:
+        run()
+    finally:
+        spark.conf.set("spark.sql.ui.explainMode", mode)
+    plans = []
+    for e in newest_first():
+        if e.executionId() <= last:
+            break
+        plans.append(e.physicalPlanDescription())
+    return plans[::-1]
+
+
+def _assert_no_single_reducer_rank(name: str, plans: list[str], n_ranks: int) -> None:
+    specs = set()
+    for plan in plans:
         # a SinglePartition exchange is allowed ONLY as a 1-row scalar
-        # reduction (rfm's broadcast anchor date — visible since the r16
-        # in-plan rank stopped truncating lineage); one feeding a
+        # reduction (rfm's broadcast anchor date); one feeding a
         # Sort/Window would be the single-reducer regression
         lines = plan.splitlines()
         for i, ln in enumerate(lines):
             if "Exchange SinglePartition" in ln:
                 nxt = lines[i + 1] if i + 1 < len(lines) else ""
                 assert "HashAggregate(keys=[]" in nxt, (name, ln, nxt)
-        # one DISTINCT window spec per rank call (the cached-relation
-        # rendering repeats nested subtrees, so raw node counts inflate),
-        # every one the bounded local row_number partitioned by __pid
+        # every window is the bounded local row_number partitioned by __pid
         assert plan.count("windowspecdefinition(") == plan.count(
             "windowspecdefinition(__pid"
         ), (name, plan)
-        specs = set(re.findall(r"windowspecdefinition\(__pid#\d+", plan))
-        assert len(specs) == n_ranks, (name, specs, plan)
+        specs |= set(re.findall(r"windowspecdefinition\(__pid#\d+", plan))
+    # one DISTINCT window spec per rank call (AQE's initial and final plans,
+    # and executions that share a subtree, repeat nodes)
+    assert len(specs) == n_ranks, (name, specs, plans)
+
+
+def _noop_write(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def test_rank_consumers_have_no_single_reducer_exchange(registry, spark, sf_dir):
+    """Every consumer of the global-rank operators exists precisely to
+    avoid a global Window.orderBy — whose plan signature is an Exchange
+    SinglePartition funneling the dataset through one task.  A regression
+    to a naive ntile/row_number would reintroduce it.  ``inplan_global_rank``
+    pins its range-partitioned input with a lazy ``localCheckpoint``, so a
+    chain of ranks (rfm's three) spreads its windows over several SQL
+    executions: the final frame's plan shows only the last.  The pin reads
+    every execution the query runs; each rank contributes one window, the
+    per-range-partition local row_number partitioned by __pid."""
+    for name, n_ranks in (
+        ("window_distribution", 1),
+        ("rfm_customer_segments", 3),
+        ("profile_decile_order_totals", 1),
+    ):
+        spark.catalog.clearCache()
+        plans = _execution_plans(
+            spark, lambda: _noop_write(registry[name].fn(spark, sf_dir)))
+        _assert_no_single_reducer_rank(name, plans, n_ranks)
+
+
+def test_rank_pin_fails_on_a_global_window(spark):
+    """The pin above catches the regression it guards: next to one
+    in-plan rank, which alone passes, a rank computed as a global
+    ``Window.orderBy`` row_number fails it."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from big_data_analytics_project_spark.operators.rank import inplan_global_rank
+
+    ranked = inplan_global_rank(spark.range(1000), ["id"])
+    _assert_no_single_reducer_rank(
+        "in-plan", _execution_plans(spark, lambda: _noop_write(ranked)), 1)
+    planted = ranked.withColumn("__planted", F.row_number().over(Window.orderBy("id")))
+    plans = _execution_plans(spark, lambda: _noop_write(planted))
+    with pytest.raises(AssertionError, match="Exchange SinglePartition"):
+        _assert_no_single_reducer_rank("planted", plans, 1)
 
 
 def test_latency_single_partition_is_only_the_scalar_agg(registry, spark, sf_dir):

@@ -8,9 +8,22 @@ from pyspark.sql import Window
 from big_data_analytics_project_spark.operators.rank import (
     bucketed_prefix_sum,
     inplan_global_rank,
-    ntile_from_rank,
     ntile_from_rank_n,
 )
+
+
+def ntile_from_rank(rank, n: int, k: int):
+    """SQL ``ntile(k)`` from a 1-based global rank with ``n`` total rows
+    as a driver int: the reference form of ``ntile_from_rank_n``."""
+    base, rem = divmod(n, k)
+    if base == 0:
+        return rank.cast("long")
+    return (
+        F.when(rank <= rem * (base + 1), (rank - 1) / (base + 1))
+        .otherwise(rem + (rank - rem * (base + 1) - 1) / base)
+        .cast("long")
+        + 1
+    )
 
 
 @pytest.mark.parametrize("n", [1, 2, 3, 5, 8, 23])
