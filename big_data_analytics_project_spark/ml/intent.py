@@ -75,9 +75,12 @@ def fit_and_evaluate(
     passes its MLlib classifier (default ``label``/``features`` columns).
 
     Caches ``train`` (the fit reads it once per iteration or tree level)
-    and ``pred`` (four evaluators read it) and never its input: a caller
+    and ``pred`` (both evaluators read it) and never its input: a caller
     whose input is an expensive lineage caches it first, since the split
-    and the prediction each read it once.  Returns
+    and the prediction each read it once.  F1, weighted recall and
+    accuracy come from one ``MulticlassMetrics`` (one confusion-count
+    job), the object ``MulticlassClassificationEvaluator.evaluate``
+    builds per call, so the values are the evaluator's own.  Returns
     ``(model, metrics, train, pred)``; callers that report split sizes
     count the cached ``train`` and ``pred`` themselves."""
     from pyspark.ml.evaluation import (
@@ -91,10 +94,10 @@ def fit_and_evaluate(
     pred = model.transform(test).cache()
     auc = BinaryClassificationEvaluator(metricName="areaUnderROC").evaluate(pred)
     mc = MulticlassClassificationEvaluator()
-    metrics = {"auc": auc}
-    for key, name in (("f1", "f1"), ("weighted_recall", "weightedRecall"),
-                      ("accuracy", "accuracy")):
-        metrics[key] = mc.evaluate(pred, {mc.metricName: name})
+    mc._transfer_params_to_java()  # noqa: SLF001 - getMetrics has no Python wrapper
+    confusion = mc._java_obj.getMetrics(pred._jdf)  # noqa: SLF001
+    metrics = {"auc": auc, "f1": confusion.weightedFMeasure(),
+               "weighted_recall": confusion.weightedRecall(), "accuracy": confusion.accuracy()}
     return model, metrics, train, pred
 
 

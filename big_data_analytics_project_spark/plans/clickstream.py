@@ -13,7 +13,7 @@ share.
 Entry point 3 (stream): see ``streaming/`` (processor + bridge).
 
 Fidelity notes:
-- event_time is PARSED (``to_timestamp`` with the reference's
+- event_time is PARSED (``try_to_timestamp`` with the reference's
   ``yyyy-MM-dd HH:mm:ss 'UTC'`` pattern) rather than left as an inferred
   string; the reference's string-typed variant makes ``session_duration``
   collapse to 0 via null casts (SURVEY §1.4) — we keep correct-timestamp

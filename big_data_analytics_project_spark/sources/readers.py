@@ -113,9 +113,11 @@ def read_clickstream_csv(spark: SparkSession, path: str) -> DataFrame:
     ``event_time`` a string because of the trailing ``' UTC'`` token; every
     downstream comparison then happens lexicographically and
     ``cast('long')`` nulls out (SURVEY §1.4).  Here we parse it properly so
-    ordering and duration semantics are exact.
+    ordering and duration semantics are exact.  An unparseable
+    ``event_time`` reads as null, as the reference's Spark 3 did, instead
+    of failing the job under ANSI mode.
     """
     raw = spark.read.schema(CLICKSTREAM_RAW).option("header", True).csv(path)
     return raw.withColumn(
-        "event_time", F.to_timestamp("event_time", EVENT_TIME_FORMAT)
+        "event_time", F.try_to_timestamp("event_time", F.lit(EVENT_TIME_FORMAT))
     ).fillna({"category_code": "unknown", "brand": "unknown"})

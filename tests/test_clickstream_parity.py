@@ -101,6 +101,28 @@ def test_leakage_cutoff_blocks_post_purchase_events(spark, tmp_path):
     assert row.unique_items == 2
 
 
+def test_unparseable_event_time_reads_as_null(spark, tmp_path):
+    """A row whose event_time does not parse reads as a null timestamp, as
+    the reference's Spark 3 did, instead of failing preprocessing under
+    ANSI mode; the other rows parse as before."""
+    from big_data_analytics_project_spark.sources.readers import (
+        read_clickstream_csv,
+    )
+
+    csv_path = str(tmp_path / "clickstream.csv")
+    truth = _make_csv(csv_path, n_sessions=50)
+    clean = sorted(read_clickstream_csv(spark, csv_path).collect())
+    with open(csv_path, "a", newline="") as f:
+        csv.writer(f).writerow(
+            ["not a time", "view", 1, 1, "c", "b", 10.0, 1, "sess-bad"])
+    events = read_clickstream_csv(spark, csv_path)
+    bad = events.where(F.col("event_time").isNull()).collect()
+    assert [r.user_session for r in bad] == ["sess-bad"]
+    assert sorted(events.where(F.col("event_time").isNotNull()).collect()) == clean
+    _, stats = run_preprocessing(spark, csv_path)
+    assert stats["n_purchase_sessions"] == truth["n_purchasing"]
+
+
 def test_training_on_synthetic(spark, tmp_path):
     """Drift floors on the clickstream-shaped fixture path (reference
     baseline: AUC 0.9276 on the real 42M-event dataset, BASELINE.md —

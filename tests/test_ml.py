@@ -187,3 +187,26 @@ def test_tuning_grid_sweep(spark, sf_dir):
     assert all(r["val_auc"] >= 0.95 for r in rows)
     assert any(r["is_best"] for r in rows)
     assert best.getNumTrees in (5, 10)
+
+
+def test_fit_and_evaluate_metrics_equal_the_evaluators(spark):
+    """F1, weighted recall and accuracy come from one MulticlassMetrics;
+    they must equal the three MulticlassClassificationEvaluator calls
+    exactly, on a noisy label where the metrics differ from each other."""
+    from pyspark.ml.classification import RandomForestClassifier
+    from pyspark.ml.evaluation import MulticlassClassificationEvaluator
+
+    from big_data_analytics_project_spark.ml.intent import fit_and_evaluate
+
+    rng = np.random.default_rng(7)
+    x = rng.normal(size=(600, 2))
+    label = ((x[:, 0] + rng.normal(scale=1.0, size=600)) > 0).astype(int)
+    feats = spark.createDataFrame(
+        [(int(y), float(a), float(b)) for y, (a, b) in zip(label, x)], "label int, a double, b double")
+    _, m, _, pred = fit_and_evaluate(feats, RandomForestClassifier(numTrees=5, maxDepth=3, seed=42),
+                                     ["a", "b"])
+    mc = MulticlassClassificationEvaluator()
+    want = {key: mc.evaluate(pred, {mc.metricName: name}) for key, name in
+            (("f1", "f1"), ("weighted_recall", "weightedRecall"), ("accuracy", "accuracy"))}
+    assert {k: m[k] for k in want} == want
+    assert 0.5 < want["accuracy"] < 0.95 and want["f1"] != want["accuracy"], want

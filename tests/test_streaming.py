@@ -63,6 +63,25 @@ def test_watermark_drops_late_events(spark, tmp_path):
     assert not any(s.startswith("2024-01-01") for s in starts)
 
 
+def test_unparseable_event_time_is_dropped_not_fatal(spark, tmp_path):
+    """One event whose ``ts`` does not parse reads as a null event time,
+    which the window drops, instead of failing the query under ANSI mode:
+    the aggregate equals the clean rows' aggregate."""
+    clean = [{"event_id": i, "ts": f"2024-01-02 12:{i:02d}:00", "user_id": i % 3,
+              "event_type": "view", "value": 1.0, "props": "{}"} for i in range(6)]
+    bad = {"event_id": 99, "ts": "not a time", "user_id": 1,
+           "event_type": "purchase", "value": 5.0, "props": "{}"}
+    results = {}
+    for name, rows in (("clean", clean), ("bad", clean + [bad])):
+        d = str(tmp_path / name)
+        os.makedirs(d)
+        _write_json(os.path.join(d, "f0.json"), rows)
+        agg = P.tumbling_features(P.read_event_stream(spark, d))
+        results[name] = sorted(P.run_to_completion(agg, f"t_bad_ts_{name}").collect())
+    assert results["bad"] == results["clean"]
+    assert sum(r.total_events for r in results["bad"]) == len(clean)
+
+
 def test_append_mode_evicts_finalized_state(spark, tmp_path):
     """The production path (run_append_to_files): each window is written
     exactly once when the watermark finalizes it, its state is evicted, a

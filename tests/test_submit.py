@@ -5,7 +5,11 @@ import subprocess
 import sys
 from pathlib import Path
 
-from big_data_analytics_project_spark.session import _DEFAULTS, emit_properties
+from big_data_analytics_project_spark.session import (
+    _DEFAULTS,
+    _LOCAL_ONLY_KEYS,
+    emit_properties,
+)
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -17,12 +21,15 @@ def test_emit_properties_matches_session_defaults():
     assert props["spark.sql.adaptive.enabled"] == "true"
     assert props["spark.serializer"].endswith("KryoSerializer")
     assert props["spark.sql.shuffle.partitions"] == "20000"
-    # local-only keys never ride to a cluster
-    assert "spark.driver.memory" not in props
-    assert "spark.ui.enabled" not in props
+    # local-only keys never ride to a cluster: a cluster keeps Spark's
+    # FileContext checkpoint manager, whose HDFS rename refuses overwrites
+    assert {"spark.driver.memory", "spark.ui.enabled"} <= set(_LOCAL_ONLY_KEYS)
+    assert "spark.sql.streaming.checkpointFileManagerClass" not in props
+    for k in _LOCAL_ONLY_KEYS:
+        assert k not in props
     # everything else IS the in-process default set — no drift possible
     for k, v in _DEFAULTS.items():
-        if k not in ("spark.driver.memory", "spark.ui.enabled"):
+        if k not in _LOCAL_ONLY_KEYS:
             assert props[k] == v
 
 
