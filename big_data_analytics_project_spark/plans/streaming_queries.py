@@ -509,15 +509,17 @@ def streaming_online_scoring(spark, sf_dir):
 # item 5): the ONLINE bridge's metrics genuinely depend on the micro-batch
 # trajectory (each batch is scored by the model as of the previous
 # batches' partial_fits), but a FROZEN model is a pure per-row function —
-# run the same foreachBatch machinery in APPEND mode (each window reaches
-# the bridge exactly once, finalized) with no learning step, and the
-# cumulative scored surface is batch-boundary-invariant.  The unfitted
-# model scores with the M7 cold-start heuristic (ml/online.py:81), whose
-# thresholds the oracle mirrors as a CASE ladder (later heuristic
-# assignments override earlier ones, hence the reversed precedence).
-# proba depends only on view_count/total_events, so the HLL-approximate
-# unique_items_approx feature never reaches the output surface.  Same
-# finalization cutoff as streaming_tumbling_append.
+# score the same tumbling features in APPEND mode (each window is emitted
+# exactly once, finalized) with no learning step, and the cumulative
+# scored surface is batch-boundary-invariant.  The frozen model compiles
+# to a native Column, so scoring runs on the stream itself and no bridge
+# is needed: the scored rows drain into the shared replay-safe writer.
+# The unfitted model scores with the M7 cold-start heuristic
+# (ml/online.py:81), whose thresholds the oracle mirrors as a CASE ladder
+# (later heuristic assignments override earlier ones, hence the reversed
+# precedence).  proba depends only on view_count/total_events, so the
+# HLL-approximate unique_items_approx feature never reaches the output
+# surface.  Same finalization cutoff as streaming_tumbling_append.
 _FROZEN_SCORING_SQL = f"""
 SELECT CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS window_start_epoch,
        user_id,
@@ -542,39 +544,36 @@ GROUP BY 1, 2
     tags=("streaming", "foreachbatch", "ml", "append"),
 )
 def streaming_frozen_scoring(spark, sf_dir):
-    """T6 oracle-checked: the foreachBatch scoring bridge with a FROZEN
-    model — watermarked tumbling features in append mode, each finalized
-    window scored exactly once by the unfitted online model (= the M7
-    cold-start heuristic), no partial_fit.  See block comment: freezing
-    the model is what makes the scored surface batch-boundary-invariant,
-    the same finalization-cutoff trick that lifted sessionization (r8)
-    and SCD2 (r12).  Production scoring shape (VERDICT r13 item 4): the
-    frozen model COMPILES to a native Column (weights are constants →
+    """T6 oracle-checked: foreachBatch scoring with a FROZEN model —
+    watermarked tumbling features in append mode, each finalized window
+    scored exactly once by the unfitted online model (= the M7 cold-start
+    heuristic), no partial_fit.  See block comment: freezing the model is
+    what makes the scored surface batch-boundary-invariant, the same
+    finalization-cutoff trick that lifted sessionization (r8) and SCD2
+    (r12).  Production scoring shape (VERDICT r13 item 4): the frozen
+    model COMPILES to a native Column (weights are constants →
     whole-stage codegen, no Python worker) and each scored micro-batch
-    lands as an idempotent ``score_batch=N`` parquet partition — nothing
+    lands as an idempotent ``batch_id=N`` parquet partition — nothing
     row-scale ever touches the driver; the result is the read-back
     artifact."""
     from ..sources import index_scratch_dir
-    from ..streaming.bridge import FrozenScoringBridge, run_foreach_batch
+    from ..sources.sinks import dir_exists
+    from ..streaming.bridge import idempotent_parquet_writer, run_foreach_batch
 
     json_dir = _staged(spark, sf_dir)
     stream = P.read_event_stream(spark, json_dir, max_files_per_trigger=2)
-    # project the epoch key in-plan (JVM-side) so the scorer's pandas view
-    # is flat scalars; the 4 FEATURE_COLUMNS ride along for the scorer
-    agg = P.tumbling_features(stream).select(
-        F.unix_timestamp("win.start").cast("long").alias("window_start_epoch"),
-        "user_id", "label", "view_count", "total_events", "total_value",
-        "unique_items_approx",
-    )
     sink_dir = index_scratch_dir(spark, "frozen_scores")
-    bridge = FrozenScoringBridge(sink_dir=sink_dir)
-    run_foreach_batch(agg, bridge, output_mode="append")
+    run_foreach_batch(
+        _frozen_scores(stream),
+        idempotent_parquet_writer(sink_dir),
+        output_mode="append",
+    )
 
     schema = (
         "window_start_epoch long, user_id long, label long, view_count long,"
         " total_events long, total_value double, proba double"
     )
-    if bridge.n_batches_written == 0:
+    if not dir_exists(spark, sink_dir):
         return spark.createDataFrame([], schema)
     return spark.read.parquet(sink_dir).select(
         F.col("window_start_epoch").cast("long").alias("window_start_epoch"),
@@ -587,18 +586,36 @@ def streaming_frozen_scoring(spark, sf_dir):
     ).where(F.col("window_start_epoch") + 3600 <= F.lit(_APPEND_CUTOFF_EPOCH))
 
 
+def _frozen_scores(stream):
+    """The frozen scorer's rows for an event stream: append-mode tumbling
+    features with the epoch key projected in-plan, nulls filled with 0
+    and ``proba`` from the unfitted model compiled to a Column."""
+    from ..ml.online import OnlineIntentModel
+    from ..streaming.bridge import frozen_scoring_column
+
+    agg = P.tumbling_features(stream).select(
+        F.unix_timestamp("win.start").cast("long").alias("window_start_epoch"),
+        "user_id", "label", "view_count", "total_events", "total_value",
+        "unique_items_approx",
+    )
+    return agg.na.fill(0).withColumn(
+        "proba", frozen_scoring_column(OnlineIntentModel())
+    )
+
+
 # --- streaming band-index ingest (index maintenance at stream pace) -------
 # The composition a live corpus runs: documents ARRIVE as a stream, and
 # the persisted MinHash band index must stay fresh WITHOUT batch rebuild
 # windows.  Each micro-batch is signed+banded (the same _bandidx_* fold
-# as the batch build) and lands as its own `ingest_batch=N` partition
-# directory with overwrite semantics — a foreachBatch REPLAY of batch N
+# as the batch build, applied on the stream) and lands as its own
+# `batch_id=N` partition directory through the shared
+# idempotent_parquet_writer — a foreachBatch REPLAY of batch N
 # (at-least-once delivery after a failure) rewrites the same directory
-# instead of duplicating rows (the idempotent_parquet_writer pattern),
-# and per-batch cost is O(|batch|) regardless of index size (the append
-# lesson).  Banding is a pure per-document map, so the UNION of the
-# per-batch partitions is batch-boundary-invariant; the oracle builds
-# the same band rows in ONE batch pass over documents, and the per-band
+# instead of duplicating rows, and per-batch cost is O(|batch|)
+# regardless of index size (the append lesson).  Banding is a pure
+# per-document map, so the UNION of the per-batch partitions is
+# batch-boundary-invariant; the oracle builds the same band rows in ONE
+# batch pass over documents, and the per-band
 # census below (row count, distinct keys, order-independent content
 # checksum binding key↔doc_id) hash-matching proves the streamed index
 # is EXACTLY the batch-built index.  The checksum term is the portable
@@ -630,30 +647,24 @@ GROUP BY band
 def streaming_band_index_ingest(spark, sf_dir):
     """Streaming MinHash band-index maintenance: each document
     micro-batch is signed+banded and appended to the persisted index as
-    an idempotent `ingest_batch=N` partition; the per-band census of the
+    an idempotent `batch_id=N` partition; the per-band census of the
     read-back index (rows, distinct keys, content checksum) must equal
     the oracle's one-pass batch build — see block comment.  Completes
     the index lifecycle with its streaming leg: batch build (r11),
     batch append (r13), tombstone delete (r13), stream ingest (r13)."""
     from ..operators.dedup import md5_hash60
     from ..sources import index_scratch_dir
-    from ..streaming.bridge import run_foreach_batch
+    from ..streaming.bridge import idempotent_parquet_writer, run_foreach_batch
     from .dedup_queries import _bandidx_banded, _bandidx_signed
 
     json_dir = _staged(spark, sf_dir, "documents")
     idx_base = index_scratch_dir(spark, "band_index_stream")
-
-    def ingest(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            _bandidx_banded(_bandidx_signed(batch_df))
-            .write.mode("overwrite")
-            .parquet(f"{idx_base}/ingest_batch={batch_id}")
-        )
-
     stream = P.read_json_stream(spark, json_dir, "doc_id LONG, text STRING")
-    run_foreach_batch(stream, ingest, output_mode="append")
+    run_foreach_batch(
+        _bandidx_banded(_bandidx_signed(stream)),
+        idempotent_parquet_writer(idx_base),
+        output_mode="append",
+    )
 
     idx = spark.read.parquet(idx_base)
     checksum_term = F.pmod(
@@ -673,14 +684,14 @@ def streaming_band_index_ingest(spark, sf_dir):
 # last asymmetry between the two persisted-index subsystems (the band
 # index has a streaming leg, the IVF posting index had only batch verbs):
 # embeddings ARRIVE as a stream, and each micro-batch is assigned to the
-# pinned centroids (map-only argmin, centroid literals inside codegen —
-# the same fold as the batch build in similarity_queries) and lands as its
-# own `ingest_batch=N` partition of the persisted posting index, itself
-# sub-partitioned by list_id so a probe still prunes to its nprobe lists
-# within every batch directory.  Overwrite semantics per batch directory
-# make an at-least-once REPLAY of batch N idempotent (the
-# idempotent_parquet_writer pattern), and per-batch cost is O(|batch|)
-# regardless of index size — no established file is ever rewritten.
+# pinned centroids (map-only argmin over a 1-row broadcast centroid
+# table, applied on the stream) and lands as its own `batch_id=N`
+# partition of the persisted posting index, itself sub-partitioned by
+# list_id so a probe still prunes to its nprobe lists within every batch
+# directory.  The shared idempotent_parquet_writer overwrites per batch
+# directory, which makes an at-least-once REPLAY of batch N idempotent,
+# and per-batch cost is O(|batch|) regardless of index size — no
+# established file is ever rewritten.
 #
 # Equivalence proof: assignment is a pure per-vector map, so the UNION of
 # the per-batch partitions is batch-boundary-invariant; the oracle assigns
@@ -702,6 +713,25 @@ SELECT base.*, nrows.streamed_index_rows FROM base CROSS JOIN nrows
 """
 
 
+def _posting_rows(embeddings):
+    """(neighbor_id, v, list_id) posting rows of a (vec_id, embedding)
+    frame, assigned to the pinned centroids.  Broadcast-data assignment
+    (r16): the literal argmin form paid ~a second of plan build/analysis
+    per micro-batch (each batch is a fresh plan); the broadcast form is
+    O(1) plan size with bit-identical assignments."""
+    from ..operators import similarity as S
+    from .ivf_centroids import IVF_CENTROIDS
+
+    return S.with_centroid_assignment(
+        embeddings.select(
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("v")
+        ),
+        F.col("v"),
+        IVF_CENTROIDS,
+        "list_id",
+    )
+
+
 @query(
     "streaming_ivf_posting_index_ingest",
     sql=_IVF_STREAM_INGEST_SQL,
@@ -710,45 +740,25 @@ SELECT base.*, nrows.streamed_index_rows FROM base CROSS JOIN nrows
 def streaming_ivf_posting_index_ingest(spark, sf_dir):
     """Streaming IVF posting-index maintenance: each embedding micro-batch
     is centroid-assigned and appended to the persisted posting index as an
-    idempotent `ingest_batch=N` partition (list_id-sub-partitioned, so
+    idempotent `batch_id=N` partition (list_id-sub-partitioned, so
     probes keep pruning); a query batch then probes the merged read-back
     index — see block comment.  Completes the five-verb × two-index
     lifecycle symmetry: the band index gained its streaming leg in r13,
     this is the posting index's."""
     from ..operators import similarity as S
     from ..sources import index_scratch_dir, read_table
-    from ..streaming.bridge import run_foreach_batch
-    from .ivf_centroids import IVF_CENTROIDS
+    from ..streaming.bridge import idempotent_parquet_writer, run_foreach_batch
 
     json_dir = _staged(spark, sf_dir, "embeddings")
     idx_base = index_scratch_dir(spark, "posting_index_stream")
-
-    def ingest(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # broadcast-data assignment (r16): the literal argmin form paid
-        # ~a second of plan build/analysis PER MICRO-BATCH (each batch is
-        # a fresh plan); the broadcast form is O(1) plan size with
-        # bit-identical assignments
-        (
-            S.with_centroid_assignment(
-                batch_df.select(
-                    F.col("vec_id").alias("neighbor_id"),
-                    F.col("embedding").alias("v"),
-                ),
-                F.col("v"),
-                IVF_CENTROIDS,
-                "list_id",
-            )
-            .write.partitionBy("list_id")
-            .mode("overwrite")
-            .parquet(f"{idx_base}/ingest_batch={batch_id}")
-        )
-
     stream = P.read_json_stream(
         spark, json_dir, "vec_id LONG, embedding ARRAY<DOUBLE>"
     )
-    run_foreach_batch(stream, ingest, output_mode="append")
+    run_foreach_batch(
+        _posting_rows(stream),
+        idempotent_parquet_writer(idx_base, ("list_id",)),
+        output_mode="append",
+    )
 
     posting = spark.read.parquet(idx_base)
     n_rows = posting.groupBy().agg(

@@ -118,8 +118,9 @@ ROWS_ONLY_FINAL: dict[str, str] = {
         " so every surface (proba means, rolling accuracy) shifts with"
         " where Spark cuts the batches; the oracle-checked duals are"
         " streaming_tumbling_append (the feature aggregation) and"
-        " streaming_frozen_scoring (the same foreachBatch bridge with the"
-        " learning step frozen — boundary-invariant, r13)"
+        " streaming_frozen_scoring (the same features scored by the model"
+        " frozen into a Column on the stream and drained through the"
+        " replay-safe file writer — boundary-invariant, r13)"
     ),
     "pyds_clickstream_gen_agg": (
         "source connector over container-generated synthetic events —"

@@ -10,6 +10,12 @@ in one shot — and the per-batch metrics stay in-plan until the final small
 aggregate.  The metrics sink keeps the reference's atomic temp-file +
 ``os.replace`` idempotence (at-least-once foreachBatch ⇒ idempotent sink).
 
+:class:`OnlineScoringBridge` is the one bridge class: it holds a learning
+model, so it must run on the driver.  A frozen model needs no bridge: it
+compiles to a native Column (:func:`frozen_scoring_column`) applied on the
+stream itself, and every file sink drains through the one replay-safe
+writer, :func:`idempotent_parquet_writer`.
+
 At larger scale the model moves out of the driver: broadcast weights + a
 scalar pandas_udf for predict, with weight updates aggregated per batch.
 """
@@ -147,58 +153,6 @@ def frozen_scoring_column(model: OnlineIntentModel):
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
 
 
-class FrozenScoringBridge:
-    """foreachBatch scorer with a FROZEN model: pure per-row scoring, no
-    ``partial_fit``/``observe``, so — unlike :class:`OnlineScoringBridge`,
-    whose metrics track the predict→fit trajectory across whatever batch
-    boundaries Spark chose — the union of its outputs over a complete
-    append-mode replay is batch-boundary-invariant and oracle-checkable
-    (the production "score a stream with last night's model" shape).
-    Two sink modes (VERDICT r13 item 4):
-
-    - ``sink_dir=None`` (unit-test mode): scored pandas frames collect on
-      the driver (``self.frames``) — fine for property tests, a driver
-      bottleneck at scale.
-    - ``sink_dir=...`` (the production shape): the frozen model is
-      COMPILED to a native Column (:func:`frozen_scoring_column` — frozen
-      weights are constants, so scoring stays inside whole-stage codegen;
-      no Python worker, no driver round-trip), and each scored
-      micro-batch lands as an idempotent ``score_batch=N`` parquet
-      partition (the streaming_band_index_ingest pattern: an
-      at-least-once replay of batch N overwrites the same directory
-      instead of duplicating rows).  Nothing row-scale touches the
-      driver."""
-
-    def __init__(
-        self, model: OnlineIntentModel | None = None, sink_dir: str | None = None
-    ):
-        self.model = model or OnlineIntentModel()  # unfitted → M7 heuristic
-        self.sink_dir = sink_dir
-        self.frames: list = []
-        self.n_batches_written = 0
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.sink_dir is None:
-            pdf = batch_df.toPandas()  # one collect; T7 guard on its result
-            if pdf.empty:
-                return
-            pdf = pdf.fillna(0)
-            x = pdf[FEATURE_COLUMNS].to_numpy(dtype=np.float64)
-            pdf["proba"] = self.model.predict_proba(x)
-            self.frames.append(pdf)
-            return
-
-        if batch_df.isEmpty():  # T7: write no empty partition directory
-            return
-        (
-            batch_df.na.fill(0)
-            .withColumn("proba", frozen_scoring_column(self.model))
-            .write.mode("overwrite")
-            .parquet(f"{self.sink_dir}/score_batch={batch_id}")
-        )
-        self.n_batches_written += 1
-
-
 def run_foreach_batch(df: DataFrame, fn, output_mode: str = "update") -> None:
     """Drain all available input of a streaming frame through a
     foreachBatch callable (``processor.drain_available``: availableNow
@@ -216,19 +170,27 @@ def run_scored_stream(agg: DataFrame, bridge: OnlineScoringBridge) -> list[dict]
     return bridge.batches
 
 
-# --- multi-sink fan-out ---------------------------------------------------
+# --- replay-safe file sink and multi-sink fan-out --------------------------
 
-def idempotent_parquet_writer(base_dir: str):
-    """A fan-out writer that lands each micro-batch in its own
-    ``batch_id=N`` directory with overwrite semantics: a foreachBatch
-    REPLAY of batch N (at-least-once delivery after a failure) rewrites
-    the same directory instead of appending duplicates — the standard
-    batch-id idempotence contract.  Readers see the union via partition
-    discovery on ``base_dir``."""
+def idempotent_parquet_writer(base_dir: str, partition_by: tuple[str, ...] = ()):
+    """The one per-micro-batch file writer of the ``foreachBatch`` sinks:
+    the fan-out archive, the frozen scores and both streamed indexes.
+
+    Batch N lands in ``<base_dir>/batch_id=N`` with overwrite semantics,
+    so an at-least-once REPLAY of batch N (redelivery after a failure)
+    rewrites its own directory instead of appending duplicates — the
+    batch-id idempotence contract (S9).  An empty batch writes nothing
+    (T7: append mode's first batch of a watermarked aggregate is empty),
+    so the sink holds no empty directory and a reader tells "no output"
+    with ``dir_exists(base_dir)``.  Readers see the union via partition
+    discovery on ``base_dir``.  ``partition_by`` sub-partitions each
+    batch directory (the posting index by ``list_id``, so probes prune)."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(base_dir, f"batch_id={batch_id}")
+        if batch_df.isEmpty():
+            return
+        batch_df.write.mode("overwrite").partitionBy(*partition_by).parquet(
+            f"{base_dir}/batch_id={batch_id}"
         )
 
     return write

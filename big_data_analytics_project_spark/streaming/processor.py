@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
 
 from ..schemas import EVENTS
+from ..sources.sinks import hadoop_fs
 
 
 # Replayable fixture tables: the JSON projection (SQL expressions) and the
@@ -288,15 +289,8 @@ def dedup_stream(
 # stream-stream outer join from 6.7 s to 3.4 s (local[4], min of 3).
 _DRAIN_STATE_PARTITIONS = 8
 
-_STATE_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
 
-
-def drain_available(
-    spark: SparkSession, writer: DataStreamWriter, rocksdb: bool = False
-) -> None:
+def drain_available(spark: SparkSession, writer: DataStreamWriter) -> None:
     """Run a configured ``writeStream`` over all available input and wait
     for it: availableNow trigger (a deterministic micro-batch sequence)
     into a throwaway ``bdap_ckpt_`` checkpoint deleted on return.  Every
@@ -307,37 +301,25 @@ def drain_available(
     partitions``) at its first start, so the count is set on the session
     for the drain and restored afterwards:
     ``min(_DRAIN_STATE_PARTITIONS, the session's shuffle partitions)``.
-    Semantics never depend on it.  ``rocksdb`` switches the state store to
-    the at-scale backend the same way: state lives off-heap/on-disk in
-    RocksDB instead of in-heap hash maps, so large watermark horizons and
-    key cardinalities stop pressuring the JVM heap (bundled with Spark)."""
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    confs = {
-        "spark.sql.shuffle.partitions": str(min(_DRAIN_STATE_PARTITIONS, shuffle))
-    }
-    if rocksdb:
-        confs[_STATE_PROVIDER_KEY] = _ROCKSDB_PROVIDER
-    saved = {key: spark.conf.get(key, None) for key in confs}
+    Semantics never depend on it.  The state-store backend is the
+    session's own ``spark.sql.streaming.stateStore.providerClass``
+    (RocksDB at scale: set it at launch)."""
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(min(_DRAIN_STATE_PARTITIONS, int(saved))))
     try:
-        for key, value in confs.items():
-            spark.conf.set(key, value)
         with tempfile.TemporaryDirectory(prefix="bdap_ckpt_") as ckpt:
             writer.option("checkpointLocation", ckpt).trigger(
                 availableNow=True
             ).start().awaitTermination()
     finally:
-        for key, prev in saved.items():
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
+        spark.conf.set(key, saved)
 
 
 def run_to_completion(
     agg: DataFrame,
     query_name: str,
     output_mode: str = "complete",
-    rocksdb: bool = False,
 ) -> DataFrame:
     """Execute a streaming aggregate over all available input (availableNow
     trigger → deterministic micro-batch sequence) into a memory sink and
@@ -351,21 +333,15 @@ def run_to_completion(
     drain_available(
         spark,
         agg.writeStream.outputMode(output_mode).format("memory").queryName(query_name),
-        rocksdb,
     )
     return spark.table(query_name)
 
 
-def run_append_to_files(
-    agg: DataFrame,
-    out_dir: str,
-    fmt: str = "parquet",
-    rocksdb: bool = False,
-) -> DataFrame:
+def run_append_to_files(agg: DataFrame, out_dir: str) -> DataFrame:
     """A bounded drain of the production streaming shape (100 TB path):
-    ``append`` output mode into a file sink.  Production runs the same
-    append shape as a long-running query with a durable checkpoint.  Each
-    window group is written exactly once, when the watermark passes its
+    ``append`` output mode into a parquet file sink.  Production runs the
+    same append shape as a long-running query with a durable checkpoint.
+    Each window group is written exactly once, when the watermark passes its
     end — state is evicted as windows finalize, so state-store size is
     bounded by (watermark horizon × active keys), and sink volume is
     proportional to *finalized* windows per batch, never to total state
@@ -380,12 +356,14 @@ def run_append_to_files(
     spark = agg.sparkSession
     drain_available(
         spark,
-        agg.writeStream.outputMode("append").format(fmt).option("path", out_dir),
-        rocksdb,
+        agg.writeStream.outputMode("append").format("parquet").option("path", out_dir),
     )
-    has_data = any(
-        f.startswith("part-") for f in os.listdir(out_dir) if not f.startswith(".")
+    # the sink lives on executor-shared storage (any Hadoop URI), so the
+    # driver probes it through the FileSystem API, not os.path
+    fs, path = hadoop_fs(spark, out_dir)
+    has_data = fs.exists(path) and any(
+        st.getPath().getName().startswith("part-") for st in fs.listStatus(path)
     )
     if not has_data:
         return spark.createDataFrame([], agg.schema)
-    return spark.read.schema(agg.schema).format(fmt).load(out_dir)
+    return spark.read.schema(agg.schema).parquet(out_dir)

@@ -145,7 +145,7 @@ def main() -> None:
 
     # ---- STREAM-INGEST leg (streaming_ivf_posting_index_ingest, r16) ---
     # The streaming verb's O(|batch|) claim: a micro-batch lands as its
-    # own overwrite-mode `ingest_batch=N` directory (list_id-
+    # own overwrite-mode `batch_id=N` directory (list_id-
     # sub-partitioned), never touching established batches — so ingest
     # cost must be flat across a 10x larger existing index.  Same
     # two-point design: the SAME sf0.01 micro-batch ingested into an
@@ -163,7 +163,7 @@ def main() -> None:
             assigned(pre)
             .write.partitionBy("list_id")
             .mode("overwrite")
-            .parquet(f"{idx_path}/ingest_batch=0")
+            .parquet(f"{idx_path}/batch_id=0")
         )
         n_idx = spark.read.parquet(idx_path).count()
         times = []
@@ -173,7 +173,7 @@ def main() -> None:
                 assigned(ivf_wave)
                 .write.partitionBy("list_id")
                 .mode("overwrite")
-                .parquet(f"{idx_path}/ingest_batch={1 + i}")
+                .parquet(f"{idx_path}/batch_id={1 + i}")
             )
             times.append(time.time() - t0)
         best = min(times[1:])

@@ -555,7 +555,7 @@ def test_streaming_ingest_probe_prunes_and_counts_broadcast(
 ):
     """streaming_ivf_posting_index_ingest's probe must read the
     stream-built artifact back with dynamic partition pruning on the
-    list id (each ingest_batch=N directory is list_id-sub-partitioned,
+    list id (each batch_id=N directory is list_id-sub-partitioned,
     so the serving layout survives streaming ingest), keep the probe an
     equi-join (no cartesian pair scan), and attach the
     streamed_index_rows audit scalar as a broadcast 1-row join."""

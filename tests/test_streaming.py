@@ -132,6 +132,24 @@ def test_append_mode_evicts_finalized_state(spark, tmp_path):
     assert "2024-01-02T14:00:00" not in rows
 
 
+def test_append_to_files_reads_back_a_file_uri_sink(spark, tmp_path):
+    """The sink is probed through Hadoop's FileSystem API, so a
+    ``file://`` URI sink (the shape of a shared-storage URI) reads back
+    the finalized windows instead of failing a driver-local listing."""
+    d = str(tmp_path / "stream")
+    os.makedirs(d)
+    for i, ts in enumerate(["2024-01-02 12:05:00", "2024-01-02 13:30:00"]):
+        f = os.path.join(d, f"f{i}.json")
+        _write_json(f, [{"event_id": i, "ts": ts, "user_id": 1,
+                         "event_type": "view", "value": 1.0, "props": "{}"}])
+        os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
+    stream = P.read_event_stream(spark, d, max_files_per_trigger=1)
+    agg = P.tumbling_features(stream, watermark="10 minutes", window="1 hour")
+    out = P.run_append_to_files(agg, (tmp_path / "sink").as_uri())
+    starts = [r["win"]["start"].isoformat() for r in out.collect()]
+    assert starts == ["2024-01-02T12:00:00"]
+
+
 def test_streaming_dedup_collapses_resent_payloads(spark, tmp_path):
     """dropDuplicatesWithinWatermark: identical (user, payload) rows
     re-sent within the watermark horizon collapse to one; distinct
@@ -369,28 +387,30 @@ def test_rocksdb_state_store_gives_identical_results(spark, sf_dir):
     """The at-scale state backend (RocksDBStateStoreProvider, bundled)
     must be a pure deployment swap: the same windowed aggregate over the
     same staged replay returns value-identical results under the default
-    in-heap provider and under RocksDB."""
+    in-heap provider and under RocksDB, set as a session conf the way a
+    deployment sets it at launch."""
+    key = "spark.sql.streaming.stateStore.providerClass"
     json_dir = P.stage_json_stream(spark, sf_dir, "events", n_files=2)
 
-    def run(rocksdb, name):
+    def run(name):
         stream = P.read_event_stream(spark, json_dir, max_files_per_trigger=2)
-        out = P.run_to_completion(
-            P.tumbling_features(stream), name,
-            output_mode="complete", rocksdb=rocksdb,
-        )
+        out = P.run_to_completion(P.tumbling_features(stream), name, "complete")
         return {tuple(r) for r in out.collect()}
 
-    default_rows = run(False, "t_sb_default")
-    rocks_rows = run(True, "t_sb_rocks")
-    assert rocks_rows == default_rows and len(rocks_rows) > 0
-    # the conf swap must not leak into the session afterwards
-    assert (
-        spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass",
-            "default-sentinel",
-        )
-        == "default-sentinel"
+    default_rows = run("t_sb_default")
+    before = spark.conf.get(key, None)
+    spark.conf.set(
+        key,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
+    try:
+        rocks_rows = run("t_sb_rocks")
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+    assert rocks_rows == default_rows and len(rocks_rows) > 0
 
 
 def test_progress_listener_records_batches(spark, sf_dir, tmp_path):
@@ -527,18 +547,19 @@ def test_staged_replays_keep_id_order(spark, sf_dir, table, key):
     _assert_staged_in_key_order(spark, sf_dir, table, key)
 
 
-def test_frozen_scoring_is_batch_boundary_invariant(spark, sf_dir):
+def test_frozen_scoring_is_batch_boundary_invariant(spark, sf_dir, tmp_path):
     """The round-13 oracle lift dual rests on this property: a FROZEN
     model is a pure per-row function, so append-mode tumbling features
-    scored batch-by-batch produce the same cumulative surface whether the
-    replay runs as 4 micro-batches or as 1 (contrast: the ONLINE bridge's
-    metrics shift with batch boundaries because each batch is scored
-    after the previous batches' partial_fits)."""
+    scored batch-by-batch land the same cumulative surface in the sink
+    whether the replay runs as 4 micro-batches or as 1 (contrast: the
+    ONLINE bridge's metrics shift with batch boundaries because each
+    batch is scored after the previous batches' partial_fits)."""
     from big_data_analytics_project_spark.plans.streaming_queries import (
         _APPEND_CUTOFF_EPOCH,
+        _frozen_scores,
     )
     from big_data_analytics_project_spark.streaming.bridge import (
-        FrozenScoringBridge,
+        idempotent_parquet_writer,
         run_foreach_batch,
     )
 
@@ -548,19 +569,17 @@ def test_frozen_scoring_is_batch_boundary_invariant(spark, sf_dir):
             stream = P.read_event_stream(
                 spark, json_dir, max_files_per_trigger=trigger_files
             )
-            agg = P.tumbling_features(stream).select(
-                F.unix_timestamp("win.start").cast("long").alias("wse"),
-                "user_id", "label", "view_count", "total_events",
-                "total_value", "unique_items_approx",
+            sink = str(tmp_path / f"scores_{trigger_files}")
+            run_foreach_batch(
+                _frozen_scores(stream),
+                idempotent_parquet_writer(sink),
+                output_mode="append",
             )
-            bridge = FrozenScoringBridge()
-            run_foreach_batch(agg, bridge, output_mode="append")
             return sorted(
-                (int(r.wse), int(r.user_id), int(r.label), int(r.view_count),
-                 int(r.total_events), float(r.total_value), float(r.proba))
-                for pdf in bridge.frames
-                for r in pdf.itertuples()
-                if r.wse + 3600 <= _APPEND_CUTOFF_EPOCH
+                (r.window_start_epoch, r.user_id, r.label, r.view_count,
+                 r.total_events, r.total_value, r.proba)
+                for r in spark.read.parquet(sink).collect()
+                if r.window_start_epoch + 3600 <= _APPEND_CUTOFF_EPOCH
             )
 
         fine = score(1)    # 4 micro-batches
@@ -606,49 +625,43 @@ def test_scd2_fold_is_batch_boundary_invariant(spark, sf_dir, tmp_path):
     assert len(fine) > 0
 
 
-def test_band_index_stream_ingest_is_batch_boundary_invariant(spark, sf_dir):
+def test_band_index_stream_ingest_is_batch_boundary_invariant(
+    spark, sf_dir, tmp_path
+):
     """The streamed band index must be a pure function of the corpus:
     ingesting as 4 micro-batches or as 1 yields identical per-band
     censuses (banding is a per-document map; idempotent batch-dir
     writes).  This is the local dual of the oracle equivalence, which
     pins the census against a one-pass batch build."""
     import shutil
-    import tempfile
 
     from big_data_analytics_project_spark.plans.dedup_queries import (
         _bandidx_banded,
         _bandidx_signed,
     )
     from big_data_analytics_project_spark.streaming.bridge import (
+        idempotent_parquet_writer,
         run_foreach_batch,
     )
 
     json_dir = P.stage_json_stream(spark, sf_dir, "documents", n_files=4)
     try:
         def census(trigger_files):
-            base = tempfile.mkdtemp(prefix="bdap_ingest_test_")
-
-            def ingest(batch_df, batch_id):
-                if batch_df.isEmpty():
-                    return
-                (
-                    _bandidx_banded(_bandidx_signed(batch_df))
-                    .write.mode("overwrite")
-                    .parquet(f"{base}/ingest_batch={batch_id}")
-                )
-
+            base = str(tmp_path / f"band_index_{trigger_files}")
             stream = P.read_json_stream(
                 spark, json_dir, "doc_id LONG, text STRING",
                 max_files_per_trigger=trigger_files,
             )
-            run_foreach_batch(stream, ingest, output_mode="append")
+            run_foreach_batch(
+                _bandidx_banded(_bandidx_signed(stream)),
+                idempotent_parquet_writer(base),
+                output_mode="append",
+            )
             idx = spark.read.parquet(base)
-            rows = sorted(
+            return sorted(
                 (r.band, r.n)
                 for r in idx.groupBy("band").agg(F.count("*").alias("n")).collect()
             )
-            shutil.rmtree(base, ignore_errors=True)
-            return rows
 
         fine = census(1)
         coarse = census(4)
@@ -656,9 +669,7 @@ def test_band_index_stream_ingest_is_batch_boundary_invariant(spark, sf_dir):
         assert len(fine) == 4  # one census row per band
         assert all(n > 0 for _, n in fine)
     finally:
-        import shutil as _sh
-
-        _sh.rmtree(json_dir, ignore_errors=True)
+        shutil.rmtree(json_dir, ignore_errors=True)
 
 
 def test_frozen_scoring_column_matches_predict_proba(spark):
@@ -719,23 +730,29 @@ def test_frozen_scoring_column_matches_predict_proba(spark):
 
 
 def test_frozen_scoring_sink_is_replay_idempotent(spark, tmp_path):
-    """The sink-mode bridge claims at-least-once safety: a REPLAY of
-    batch N (same batch_id) must overwrite its score_batch=N directory,
-    not duplicate rows — the same contract streaming_band_index_ingest
-    pins for the index sink."""
-    from big_data_analytics_project_spark.ml.online import FEATURE_COLUMNS
+    """The frozen scores' sink claims at-least-once safety: a REPLAY of
+    batch N (same batch_id) must overwrite its batch_id=N directory, not
+    duplicate rows — the same writer lands both streamed indexes."""
+    from big_data_analytics_project_spark.ml.online import (
+        FEATURE_COLUMNS,
+        OnlineIntentModel,
+    )
+    from big_data_analytics_project_spark.sources.sinks import list_subdir_names
     from big_data_analytics_project_spark.streaming.bridge import (
-        FrozenScoringBridge,
+        frozen_scoring_column,
+        idempotent_parquet_writer,
     )
 
     sink = str(tmp_path / "scores")
-    bridge = FrozenScoringBridge(sink_dir=sink)
+    write = idempotent_parquet_writer(sink)
     rows = [(i, float(i % 7), float(i % 13), float(i), float(i % 3))
             for i in range(50)]
-    df = spark.createDataFrame(rows, ["row_id"] + FEATURE_COLUMNS)
+    df = spark.createDataFrame(rows, ["row_id"] + FEATURE_COLUMNS).withColumn(
+        "proba", frozen_scoring_column(OnlineIntentModel())
+    )
 
-    bridge(df, 0)
-    bridge(df.where("row_id < 20"), 1)
+    write(df, 0)
+    write(df.where("row_id < 20"), 1)
     first = spark.read.parquet(sink)
     # materialize BEFORE the replay: the overwrite deletes the files this
     # lazy frame's listing points at
@@ -743,12 +760,44 @@ def test_frozen_scoring_sink_is_replay_idempotent(spark, tmp_path):
     first_sum = first.groupBy().sum("proba").collect()[0][0]
     assert first_count == 70
     # replay batch 1 (at-least-once delivery after a failure)
-    bridge(df.where("row_id < 20"), 1)
+    write(df.where("row_id < 20"), 1)
     replayed = spark.read.parquet(sink)
     assert replayed.count() == 70  # overwrite, not append
     # and the scored values are unchanged by the replay
     assert replayed.groupBy().sum("proba").collect()[0][0] == first_sum
-    assert bridge.n_batches_written == 3
+    assert sorted(list_subdir_names(spark, sink)) == ["batch_id=0", "batch_id=1"]
+
+
+def test_parquet_writer_skips_empty_batches(spark, tmp_path):
+    """T7: an empty micro-batch writes no directory, so the sink of a
+    stream with no output does not exist, and ``partition_by``
+    sub-partitions each batch directory."""
+    from big_data_analytics_project_spark.sources.sinks import (
+        dir_exists,
+        list_subdir_names,
+    )
+    from big_data_analytics_project_spark.streaming.bridge import (
+        idempotent_parquet_writer,
+    )
+
+    sink = str(tmp_path / "sink")
+    write = idempotent_parquet_writer(sink)
+    df = spark.createDataFrame([(1, 0), (2, 1), (3, 1)], "id long, list_id int")
+    write(df.where("id > 9"), 0)
+    assert not dir_exists(spark, sink)
+    write(df, 1)
+    write(df.where("id > 9"), 2)
+    assert list_subdir_names(spark, sink) == ["batch_id=1"]
+
+    parts = str(tmp_path / "parts")
+    idempotent_parquet_writer(parts, ("list_id",))(df, 0)
+    assert sorted(list_subdir_names(spark, f"{parts}/batch_id=0")) == [
+        "list_id=0", "list_id=1",
+    ]
+    back = spark.read.parquet(parts)
+    assert sorted((r.id, r.list_id, r.batch_id) for r in back.collect()) == [
+        (1, 0, 0), (2, 1, 0), (3, 1, 0),
+    ]
 
 
 def test_frozen_scoring_column_scaler_edge_branches(spark):
@@ -869,56 +918,42 @@ def test_embedding_stream_staging_roundtrips_doubles_exactly(spark, sf_dir):
         shutil.rmtree(json_dir, ignore_errors=True)
 
 
-def test_ivf_stream_ingest_is_batch_boundary_invariant(spark, sf_dir):
+def test_ivf_stream_ingest_is_batch_boundary_invariant(spark, sf_dir, tmp_path):
     """Replaying the embedding stream 1 file/trigger vs all files in one
     trigger must produce identical per-list censuses (assignment is a
     per-vector map; idempotent batch-dir writes) — the local dual of the
-    streaming_ivf_posting_index_ingest oracle equivalence."""
+    streaming_ivf_posting_index_ingest oracle equivalence, through the
+    query's own posting rows and writer."""
     import shutil
-    import tempfile
 
-    from big_data_analytics_project_spark.operators import similarity as S
-    from big_data_analytics_project_spark.plans.ivf_centroids import (
-        IVF_CENTROIDS,
+    from big_data_analytics_project_spark.plans.streaming_queries import (
+        _posting_rows,
     )
     from big_data_analytics_project_spark.streaming.bridge import (
+        idempotent_parquet_writer,
         run_foreach_batch,
     )
 
     json_dir = P.stage_json_stream(spark, sf_dir, "embeddings", n_files=4)
     try:
         def census(trigger_files):
-            base = tempfile.mkdtemp(prefix="bdap_ivf_ingest_test_")
-
-            def ingest(batch_df, batch_id):
-                if batch_df.isEmpty():
-                    return
-                (
-                    batch_df.select(
-                        F.col("vec_id").alias("neighbor_id"),
-                        S.nearest_centroid(
-                            F.col("embedding"), IVF_CENTROIDS
-                        ).alias("list_id"),
-                    )
-                    .write.partitionBy("list_id")
-                    .mode("overwrite")
-                    .parquet(f"{base}/ingest_batch={batch_id}")
-                )
-
+            base = str(tmp_path / f"posting_index_{trigger_files}")
             stream = P.read_json_stream(
                 spark, json_dir, "vec_id LONG, embedding ARRAY<DOUBLE>",
                 max_files_per_trigger=trigger_files,
             )
-            run_foreach_batch(stream, ingest, output_mode="append")
+            run_foreach_batch(
+                _posting_rows(stream),
+                idempotent_parquet_writer(base, ("list_id",)),
+                output_mode="append",
+            )
             idx = spark.read.parquet(base)
-            rows = sorted(
+            return sorted(
                 (r.list_id, r.n)
                 for r in idx.groupBy("list_id")
                 .agg(F.count("*").alias("n"))
                 .collect()
             )
-            shutil.rmtree(base, ignore_errors=True)
-            return rows
 
         fine = census(1)
         coarse = census(4)
